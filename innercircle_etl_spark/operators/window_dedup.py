@@ -23,6 +23,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _qcol(name: str) -> Column:
+    """``F.col`` with the name backtick-quoted so dots (and literal
+    backticks, doubled per Spark's quoting rule) are taken verbatim
+    instead of parsed as struct-field paths."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def _rank_filter(
     df: DataFrame,
     keys: Sequence[str],
@@ -30,7 +37,7 @@ def _rank_filter(
     n: int,
     func=F.row_number,
 ) -> DataFrame:
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*[_qcol(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("__rnk", func().over(w))
         .filter(F.col("__rnk") <= n)
@@ -49,15 +56,8 @@ def latest_per_key(
     ``tiebreakers`` pins determinism when order_col ties (the
     reference leaves ties unspecified — SURVEY §7 'what's hard').
     """
-    order = [F.col(order_col).desc()] + [F.col(t).desc() for t in tiebreakers]
+    order = [_qcol(order_col).desc()] + [_qcol(t).desc() for t in tiebreakers]
     return _rank_filter(df, keys, order, 1)
-
-
-def _qcol(name: str) -> Column:
-    """``F.col`` with the name backtick-quoted so dots (and literal
-    backticks, doubled per Spark's quoting rule) are taken verbatim
-    instead of parsed as struct-field paths."""
-    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _extremum_per_key_agg(
@@ -144,7 +144,7 @@ def first_per_key(
     tiebreakers: Sequence[str] = (),
 ) -> DataFrame:
     """Keep the row with the smallest ``order_col`` per key group (W2)."""
-    order = [F.col(order_col).asc()] + [F.col(t).asc() for t in tiebreakers]
+    order = [_qcol(order_col).asc()] + [_qcol(t).asc() for t in tiebreakers]
     return _rank_filter(df, keys, order, 1)
 
 

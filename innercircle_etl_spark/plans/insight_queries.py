@@ -14,8 +14,6 @@ base 0.5 (dyadic → pow bit-identical across libm, see f3).
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -162,17 +160,16 @@ def ep5_shadow_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the as-of shuffles once on (wallet, coll); the insider dim and
     latest-floor broadcast; the summary reuses the (wallet, coll)
     clustering left by the as-of."""
-    # Single-pass fact consumption — the DEFAULT since the round-7
-    # A/B (tools/ab_fused_scan.py; SCALE.md): ONE scan repartitioned
-    # by coll and pinned. The floor percentile ((coll, ev_date)) and
-    # the fused-legs groupBy ((wallet, coll, ev_date, leg)) both
-    # cluster on supersets of {coll}, so NEITHER adds an exchange on
-    # top of the one repartition — see build_cet_roi's fused branch
-    # for the distribution-satisfaction argument. Measured min-of-3
-    # at sf1: fused warm 5.01s / fadvise-cold 4.82s vs lazy 7.40 /
-    # 7.06 — the fused form wins ~32% even with a warm page cache
-    # here because it also deletes two exchanges, not just two
-    # scans. SPARK_GRAFT_FUSED_SCAN=0 restores the lazy 2-scan form.
+    # Single-pass fact consumption (the round-7 A/B; SCALE.md): ONE
+    # scan repartitioned by coll and pinned. The floor percentile
+    # ((coll, ev_date)) and the fused-legs groupBy ((wallet, coll,
+    # ev_date, leg)) both cluster on supersets of {coll}, so NEITHER
+    # adds an exchange on top of the one repartition — see
+    # build_cet_roi for the distribution-satisfaction argument.
+    # Measured min-of-3 at sf1: fused warm 5.01s / fadvise-cold 4.82s
+    # vs a lazy 2-scan form's 7.40 / 7.06 — the fused form wins ~32%
+    # even with a warm page cache because it also deletes two
+    # exchanges, not just two scans.
     # okey is ep6's column — this cascade never touches it, so keep
     # it out of the repartition exchange and the pinned blocks
     # (guide §2.1: shuffle/persist only the columns the DAG reads).
@@ -188,13 +185,10 @@ def ep5_shadow_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "price",
         (F.col("flag") == "R").alias("is_sell"),
     )
-    if os.environ.get("SPARK_GRAFT_FUSED_SCAN", "1") != "0":
-        fact = fact.repartition(F.col("coll")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        fact.count()
-    else:
-        fact = widen(fact)
+    fact = fact.repartition(F.col("coll")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    fact.count()
     insiders = _insiders(spark, sf_dir)
 
     # floor_daily feeds TWO consumers (the entry-floor join and the

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from innercircle_etl_spark.operators.asof import asof_join
 from innercircle_etl_spark.operators.window_dedup import latest_per_key_agg
 from innercircle_etl_spark.plans.registry import (
+    SCRATCH,
     dsum,
     duck_dsum,
     load,
@@ -497,8 +498,7 @@ def x_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    base = f"{scratch}/bucketed_{os.path.basename(sf_dir)}"
+    base = f"{SCRATCH}/bucketed_{os.path.basename(sf_dir)}"
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"

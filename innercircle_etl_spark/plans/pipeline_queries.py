@@ -16,9 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from innercircle_etl_spark.pipeline import run_daily, write_daily_partitioned
-from innercircle_etl_spark.plans.registry import dsum, duck_dsum, load, register
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+from innercircle_etl_spark.plans.registry import (
+    SCRATCH,
+    dsum,
+    duck_dsum,
+    load,
+    register,
+)
 
 _START, _END = "2001-06-01", "2001-06-30"
 _RUN_DATE = "2001-06-25"  # the stale "current" day

@@ -29,6 +29,19 @@ from pyspark.sql import functions as F
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
+# The one root for every scratch write (round-trip tables, persisted
+# indexes, stream sources and checkpoints): ``.scratch`` at the
+# repository root (gitignored) unless SPARK_GRAFT_SCRATCH names
+# another. Read once, at import — set the variable before importing
+# the package.
+SCRATCH = os.environ.get(
+    "SPARK_GRAFT_SCRATCH",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
+        ".scratch",
+    ),
+)
+
 TABLES = (
     "region",
     "nation",

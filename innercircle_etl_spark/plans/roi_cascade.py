@@ -20,8 +20,6 @@ A11 wallet rollup → O1 global top-K.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,7 +27,7 @@ from pyspark.sql import functions as F
 from innercircle_etl_spark.operators.asof import asof_join
 from innercircle_etl_spark.operators.percentiles import percentile_disc
 from innercircle_etl_spark.operators.window_dedup import latest_per_key
-from innercircle_etl_spark.plans.registry import dsum, load, register, widen
+from innercircle_etl_spark.plans.registry import dsum, load, register
 
 _TOP_WALLETS = 100
 
@@ -156,49 +154,31 @@ def load_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_cet_roi(
-    fact: DataFrame, fused_scan: bool | None = None
-) -> DataFrame:
+def build_cet_roi(fact: DataFrame) -> DataFrame:
     """fact → per-(wallet, collection) ROI rollup (the reference's
     cet_roi, update_etl.py:635-798): floor percentile → latest floor
     → as-of buy/sell match → floor fallback → rollup. Shared by the
     ep3 top-K cascade and the ep4 circle-cohort assembly."""
-    if fused_scan is None:
-        fused_scan = os.environ.get("SPARK_GRAFT_FUSED_SCAN", "1") != "0"
-    if fused_scan:
-        # Single-pass form — the DEFAULT since the round-7 A/B
-        # (tools/ab_fused_scan.py; numbers in SCALE.md): ONE fact
-        # scan, repartitioned by `coll` and pinned. Every downstream
-        # grouping clusters on a superset of {coll} (floor:
-        # (coll, ev_date); latest floor: (coll)), so Catalyst's
-        # ClusteredDistribution is satisfied by the existing
-        # HashPartitioning and those stages add NO exchange; only
-        # the as-of union re-shuffles (its Union parent erases the
-        # partitioning info). Trade vs the lazy form: saves two
-        # pruned fact scans + the floor's full-cardinality 3-col
-        # exchange, pays one full-width exchange + the pin
-        # (MEMORY_AND_DISK — spills like shuffle data at cluster
-        # scale, never OOMs the executors). Measured min-of-3, sf1:
-        # warm 5.62 vs 5.80, fadvise-cold 5.90 vs 6.61, and the
-        # lazy form's worst rep under host cache reclaim hit 95.8s
-        # vs fused 10.0s — the 3x-scan IO exposure the round-6
-        # verdict flagged. SPARK_GRAFT_FUSED_SCAN=0 restores the
-        # lazy 3-scan form (wins only when the page cache makes
-        # re-scans free AND memory is tighter than IO).
-        fact = fact.repartition(F.col("coll")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        fact.count()  # eager fill: lazy-cache races cost more
-        return _cet_roi_body(fact)
-    # Lazy 3-scan form: each branch (floor percentile, buys, sells)
-    # re-reads the column-pruned parquet scan inside the one job.
-    # widen() corrects the local single-row-group fixture's
-    # near-serial scan layout (no-op on a many-split cluster scan).
-    fact = widen(fact)
-    return _cet_roi_body(fact)
+    # Single-pass form (the round-7 A/B; numbers in SCALE.md): ONE
+    # fact scan, repartitioned by `coll` and pinned. Every downstream
+    # grouping clusters on a superset of {coll} (floor: (coll,
+    # ev_date); latest floor: (coll)), so Catalyst's
+    # ClusteredDistribution is satisfied by the existing
+    # HashPartitioning and those stages add NO exchange; only the
+    # as-of union re-shuffles (its Union parent erases the
+    # partitioning info). Trade vs a lazy re-scanning form: saves two
+    # pruned fact scans + the floor's full-cardinality 3-col
+    # exchange, pays one full-width exchange + the pin
+    # (MEMORY_AND_DISK — spills like shuffle data at cluster scale,
+    # never OOMs the executors). Measured min-of-3, sf1: warm 5.62 vs
+    # 5.80, fadvise-cold 5.90 vs 6.61, and the lazy form's worst rep
+    # under host cache reclaim hit 95.8s vs fused 10.0s — the 3x-scan
+    # IO exposure the round-6 verdict flagged.
+    fact = fact.repartition(F.col("coll")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    fact.count()  # eager fill: lazy-cache races cost more
 
-
-def _cet_roi_body(fact: DataFrame) -> DataFrame:
     # A8: daily floor percentile, then W1: latest floor per collection
     floor_daily = percentile_disc(
         fact, ["coll", "ev_date"], "price", 0.2, out_col="floor_price"

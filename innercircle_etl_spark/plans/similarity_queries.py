@@ -4,6 +4,9 @@ random-hyperplane LSH bucketed variant as the scale path)."""
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -12,7 +15,7 @@ from innercircle_etl_spark.plans.planting import (
     CODEBOOK_MOD,
     VEC_SCALE_CORPUS_SQL,
 )
-from innercircle_etl_spark.plans.registry import load, register
+from innercircle_etl_spark.plans.registry import SCRATCH, load, register
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
 _TOP_K = 5
@@ -1717,30 +1720,76 @@ def _salted_topk_rank(scored, part_cols, order_cols, k_max):
     )
 
 
-def _mine_pos_neg(scored, group_col, order_cols, n_negs):
-    """Shared mining skeleton (ann_hard_negatives and ep13): the
-    scored frame must carry an ``is_neg`` boolean; per group keep
-    the rank-1 positive and the top-``n_negs`` negatives, ranked by
-    ``order_cols`` through the salted two-phase top-k, and PIN the
-    kept frame (<= n_negs+1 rows per group) — the pos and neg legs
-    both read it, and without the checkpoint each would re-run the
-    corpus scoring pass (the racing-consumer lesson)."""
-    return (
-        _salted_topk_rank(
-            scored, [group_col, "is_neg"], order_cols, max(n_negs, 1)
-        )
-        .filter(
-            (F.col("is_neg") & (F.col("rank") <= n_negs))
-            | (~F.col("is_neg") & (F.col("rank") == 1))
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
 # ------------------------------------- contrastive triplet mining
 
-_HN_ANCHORS = 40  # anchor batch size (FIXED — not corpus-proportional)
-_HN_NEGS = 3  # hard negatives mined per anchor
+
+@dataclass(frozen=True)
+class _Family:
+    """One contrastive-mining family. The hard-negative rows
+    (``ann_hard_negatives*``) and the ep13 pair rows
+    (``ep13_contrastive_pairs*``) run the SAME mining core — anchor
+    batch, fixed-k codebook, inverted file, scorers, pinned keep,
+    recall and triplet tails — and differ only in these fields."""
+
+    ids: tuple[str, ...]  # corpus id columns
+    cand: tuple[str, ...]  # the same ids on a scored candidate row
+    neg: str  # corpus column whose mismatch with the anchor's = negative
+    anchor: str  # corpus column that keys an anchor
+    anchor_out: str  # the anchor key's name on every mined frame
+    batch: int  # anchor batch size (FIXED — never corpus-proportional)
+    negs: int  # hard negatives kept per anchor
+    head: str | None  # rows with head == 0 may be anchors/centroids
+    codebook: int  # fixed-k IVF codebook: heads with anchor < codebook
+    # positives from the equi-join on ``neg`` (ep13's same-document
+    # leg) rather than from the probed IVF cells; such a family keys
+    # its anchors by ``neg`` and has a ``head`` column
+    same_key_pos: bool
+
+    @property
+    def anchor_neg(self) -> str:
+        """The anchor's ``neg`` value on anchor and probe rows."""
+        if self.neg == self.anchor:
+            return self.anchor_out
+        return f"anchor_{self.neg}"
+
+    def heads(self, cond):
+        """``cond`` restricted to the rows that may be anchors or
+        centroids."""
+        if self.head is None:
+            return cond
+        return cond & (F.col(self.head) == 0)
+
+
+# Hard negatives over the embeddings table: anchors are vectors,
+# negatives are different-label vectors.
+_HN = _Family(
+    ids=("vec_id",),
+    cand=("cand_id",),
+    neg="label",
+    anchor="vec_id",
+    anchor_out="anchor_id",
+    batch=40,
+    negs=3,
+    head=None,
+    codebook=_FIXED_K,
+    same_key_pos=False,
+)
+# ep13 pairs over chunk embeddings: anchors are each doc's first
+# chunk, negatives are chunks of other docs, positives the anchor
+# doc's other chunks.
+_EP13 = _Family(
+    ids=("doc_id", "chunk_idx"),
+    cand=("c_doc", "c_chunk"),
+    neg="doc_id",
+    anchor="doc_id",
+    anchor_out="anchor_doc",
+    batch=20,
+    negs=2,
+    head="chunk_idx",
+    codebook=32,
+    same_key_pos=True,
+)
+_AMORT_BATCHES = 2  # distinct anchor batches mined against ONE index
 
 # Exact-mining CTE chain (e → anchors → full-corpus scored → ranked),
 # shared between the ann_hard_negatives oracle and the
@@ -1753,7 +1802,7 @@ _HN_EXACT_CTES = f"""e AS (
 ),
 a AS (
     SELECT vec_id AS anchor_id, label AS anchor_label, v AS va
-    FROM e WHERE vec_id < {_HN_ANCHORS}
+    FROM e WHERE vec_id < {_HN.batch}
 ),
 scored AS (
     SELECT a.anchor_id, e.vec_id AS cand_id,
@@ -1776,7 +1825,7 @@ pos AS (
 ),
 neg AS (
     SELECT anchor_id, rank AS neg_rank, cand_id AS neg_id, cos AS neg_cos
-    FROM ranked WHERE is_neg AND rank <= {_HN_NEGS}
+    FROM ranked WHERE is_neg AND rank <= {_HN.negs}
 )
 SELECT n.anchor_id, p.pos_id, p.pos_cos,
        n.neg_rank, n.neg_id, n.neg_cos,
@@ -1785,67 +1834,35 @@ FROM neg n JOIN pos p ON n.anchor_id = p.anchor_id
 """
 
 
-def _hn_anchor_batch(e: DataFrame, lo: int, hi: int) -> DataFrame:
-    """(anchor_id, anchor_label, va): one FIXED-size anchor batch —
-    the ``vec_id`` slice [lo, hi). Batch size is a constant, never
-    corpus-proportional (the sf1-timeout lesson); the amortized
-    mining shape streams a sequence of these against ONE index."""
-    return e.filter(
-        (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-    ).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("v").alias("va"),
-    )
-
-
-def _hn_frames(spark: SparkSession, sf_dir: str):
-    """(corpus, anchors) for the hard-negative mining family: the
-    embeddings corpus as (vec_id, label, v double[]) and the FIXED
-    40-vector anchor batch (vec_id < _HN_ANCHORS — never
-    corpus-proportional; the sf1-timeout lesson)."""
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
+def _hn_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, label, v double[]): the embeddings corpus the
+    hard-negative rows mine and the index-maintenance rows index."""
+    return load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", V.as_double(F.col("embedding")).alias("v")
     )
-    return e, _hn_anchor_batch(e, 0, _HN_ANCHORS)
 
 
-def _hn_mine(scored: DataFrame) -> DataFrame:
-    """Rank a (anchor_id, cand_id, is_neg, cos) scored frame through
-    the salted two-phase top-k and keep the rank-1 positive + top-3
-    negatives per anchor (pinned by _mine_pos_neg)."""
-    return _mine_pos_neg(
-        scored,
-        "anchor_id",
-        [F.col("cos").desc(), F.col("cand_id").asc()],
-        _HN_NEGS,
+def _anchor_batch(fam: _Family, corpus: DataFrame, b: int) -> DataFrame:
+    """(anchor_out, [anchor_neg,] va): anchor batch ``b`` — the head
+    rows whose anchor key lies in [b*batch, (b+1)*batch). Batch size
+    is a constant, never corpus-proportional (the sf1-timeout
+    lesson); the amortized shape streams a sequence of these against
+    ONE index."""
+    lo, hi = b * fam.batch, (b + 1) * fam.batch
+    key = F.col(fam.anchor)
+    cols = [key.alias(fam.anchor_out), F.col("v").alias("va")]
+    if fam.neg != fam.anchor:
+        cols.insert(1, F.col(fam.neg).alias(fam.anchor_neg))
+    return corpus.filter(fam.heads((key >= lo) & (key < hi))).select(*cols)
+
+
+def _codebook(fam: _Family, corpus: DataFrame) -> DataFrame:
+    """(cid, cv): the fixed-k codebook — the head rows whose anchor
+    key is below ``codebook`` (ann_ivf_fixed_k's deterministic
+    first-k convention)."""
+    return corpus.filter(fam.heads(F.col(fam.anchor) < fam.codebook)).select(
+        F.col(fam.anchor).alias("cid"), F.col("v").alias("cv")
     )
-
-
-def _hn_score_exact(e: DataFrame, anchors: DataFrame) -> DataFrame:
-    """(anchor_id, cand_id, is_neg, cos): the FULL corpus scored
-    against one broadcast anchor batch — a corpus pass PER BATCH,
-    which is exactly the cost the IVF candidate path amortizes
-    away. Norms fold once per side before the |anchors|-way fan-out
-    (guide §2.2) — same per-pair expression tree, bit-identical."""
-    return e.withColumn("nv", V.norm(F.col("v"))).join(
-        F.broadcast(anchors.withColumn("na", V.norm(F.col("va")))),
-        F.col("vec_id") != F.col("anchor_id"),
-    ).select(
-        "anchor_id",
-        F.col("vec_id").alias("cand_id"),
-        (F.col("label") != F.col("anchor_label")).alias("is_neg"),
-        (
-            V.dot(F.col("va"), F.col("v")) / (F.col("na") * F.col("nv"))
-        ).alias("cos"),
-    )
-
-
-def _hn_kept_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact full-corpus-scored kept set (recall baseline)."""
-    e, anchors = _hn_frames(spark, sf_dir)
-    return _hn_mine(_hn_score_exact(e, anchors))
 
 
 def _ivf_assign(
@@ -1901,11 +1918,14 @@ def _ivf_assign(
     )
 
 
-def _hn_ivf_assign(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, label, v, cid): the mining family's inverted file —
-    _ivf_assign keyed by vec_id with ``label`` riding along for the
-    is_neg flag downstream."""
-    return _ivf_assign(e, cent, ["vec_id"], ("label",))
+def _inverted_file(
+    fam: _Family, corpus: DataFrame, cent: DataFrame
+) -> DataFrame:
+    """(ids..., [neg,] v, cid): the family's inverted file —
+    _ivf_assign keyed by the corpus ids, with the negative-marker
+    column riding along when it is not an id."""
+    payload = () if fam.neg in fam.ids else (fam.neg,)
+    return _ivf_assign(corpus, cent, list(fam.ids), payload)
 
 
 def _ivf_probes(
@@ -1936,11 +1956,112 @@ def _ivf_probes(
     )
 
 
+def _score(
+    fam: _Family,
+    cands: DataFrame,
+    anchors: DataFrame,
+    on=None,
+) -> DataFrame:
+    """(anchor_out, cand..., is_neg, cos): ``cands`` rows scored
+    against the broadcast ``anchors`` side (anchor or probe rows)
+    wherever ``on`` holds. The default ``on`` is the EXACT scorer:
+    every corpus row but the anchor's own — a corpus pass PER BATCH,
+    which is exactly the cost the IVF path amortizes away. Norms
+    fold once per side before the fan-out join (guide §2.2) — the
+    same per-pair expression tree as V.cosine, bit-identical."""
+    if on is None:
+        on = ~fam.heads(F.col(fam.anchor) == F.col(fam.anchor_out))
+    return cands.withColumn("nv", V.norm(F.col("v"))).join(
+        F.broadcast(anchors.withColumn("na", V.norm(F.col("va")))), on
+    ).select(
+        fam.anchor_out,
+        *[F.col(i).alias(c) for i, c in zip(fam.ids, fam.cand)],
+        (F.col(fam.neg) != F.col(fam.anchor_neg)).alias("is_neg"),
+        (
+            V.dot(F.col("va"), F.col("v")) / (F.col("na") * F.col("nv"))
+        ).alias("cos"),
+    )
+
+
+def _score_ivf(
+    fam: _Family,
+    corpus: DataFrame,
+    assign: DataFrame,
+    cent: DataFrame,
+    anchors: DataFrame,
+    probes: DataFrame | None = None,
+) -> DataFrame:
+    """The PRODUCTION candidate leg: each anchor's nprobe nearest
+    cells equi-joined against the inverted file ``assign``, so only
+    ~nprobe/k of the corpus is scored per batch; the mining
+    downstream is IDENTICAL to the exact leg's. IVF was chosen over
+    sign-LSH empirically: on the embeddings corpus the 8-plane
+    buckets recall ~3% of the exact kept set while nprobe=2 IVF
+    recalls ~74% scanning 4x less than even a 4-bucket LSH (43%) —
+    nearest-centroid cells track cosine structure; random hyperplane
+    signs on near-random vectors do not.
+
+    ``assign`` is the cost knob: PREBUILT (pinned or persisted), the
+    per-batch cost is probes (batch x k) + probed-cell scoring + the
+    salted rank — measured 16x under the exact scorer's corpus pass
+    at sf10. Built INLINE, the assignment itself is a k-centroid
+    corpus pass, so one batch roughly breaks even; production mines
+    a stream of batches against one index. Pass ``probes`` to reuse
+    an already-derived probe frame (the cellpart row derives it once
+    to push the cid set as a partition filter).
+
+    A ``same_key_pos`` family adds the equi-join leg on ``neg`` (the
+    anchor's other rows, read from ``corpus``) and takes only
+    other-key rows from the cells: a same-document crop is NOT
+    globally near its anchor in hash space, so the cells find ep13's
+    negatives but its positives only at chance."""
+    if probes is None:
+        probes = _ivf_probes(
+            anchors, cent, fam.anchor_out, tuple(anchors.columns[1:])
+        )
+    scored = _score(
+        fam,
+        assign,
+        probes,
+        (F.col("cid") == F.col("pcid"))
+        & (F.col(fam.anchor) != F.col(fam.anchor_out)),
+    )
+    if not fam.same_key_pos:
+        return scored
+    same_key = _score(
+        fam,
+        corpus,
+        anchors,
+        (F.col(fam.neg) == F.col(fam.anchor_neg)) & (F.col(fam.head) != 0),
+    )
+    return same_key.unionByName(scored)
+
+
+def _keep(fam: _Family, scored: DataFrame) -> DataFrame:
+    """The mining keep: per anchor, the rank-1 positive and the
+    top-``negs`` negatives, ranked by (cos DESC, cand ids ASC)
+    through the salted two-phase top-k with is_neg in the partition
+    key (one ranking shuffle serves both legs), then PINNED — the
+    pos and neg legs (or the recall diff) read it, and without the
+    checkpoint each would re-run the corpus scoring pass (the
+    racing-consumer lesson)."""
+    order = [F.col("cos").desc(), *[F.col(c).asc() for c in fam.cand]]
+    return (
+        _salted_topk_rank(
+            scored, [fam.anchor_out, "is_neg"], order, max(fam.negs, 1)
+        )
+        .filter(
+            (F.col("is_neg") & (F.col("rank") <= fam.negs))
+            | (~F.col("is_neg") & (F.col("rank") == 1))
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
 def _recall_vs_exact(
     exact_kept: DataFrame,
     ann_kept: DataFrame,
     group_cols: list[str],
-    out_aliases: dict[str, str] | None = None,
 ) -> DataFrame:
     """Per-group hits / truth / recall: diff two kept frames on ALL
     of exact_kept's columns (both sides must carry exactly the
@@ -1966,14 +2087,79 @@ def _recall_vs_exact(
     tot = exact_kept.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_true")
     )
-    aliases = out_aliases or {}
     return tot.join(hits, list(group_cols), "left").select(
-        *[F.col(c).alias(aliases.get(c, c)) for c in group_cols],
+        *group_cols,
         F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
         "n_true",
         (
             F.coalesce(F.col("n_hits"), F.lit(0)) * 1.0 / F.col("n_true")
         ).alias("recall"),
+    )
+
+
+def _recall_batch(
+    fam: _Family, corpus: DataFrame, anchors: DataFrame, ivf_scored
+) -> DataFrame:
+    """(anchor_out, is_neg, n_hits, n_true, recall) for one anchor
+    batch: the exact kept set (the recall baseline production drops)
+    diffed per (anchor, leg) against the kept set of
+    ``ivf_scored(anchors)`` — the candidate path under test — both
+    through the identical _keep. The positive and negative legs are
+    measured separately, since candidate loss hits them differently."""
+    ident = [fam.anchor_out, "is_neg", *fam.cand]
+    exact = _keep(fam, _score(fam, corpus, anchors)).select(*ident)
+    ann = _keep(fam, ivf_scored(anchors)).select(*ident)
+    return _recall_vs_exact(exact, ann, [fam.anchor_out, "is_neg"])
+
+
+def _recall_over_batches(
+    fam: _Family, corpus: DataFrame, ivf_scored
+) -> DataFrame:
+    """The amortized mining loop: _AMORT_BATCHES fixed anchor
+    batches, each recall-diffed by _recall_batch and union'd with a
+    batch_id tag. The index forms — pinned (amortized), persisted,
+    cell-partitioned — differ ONLY in where the index lives and how
+    much of it a batch reads (``ivf_scored``); this one loop is the
+    structural proof the kept sets cannot."""
+    return reduce(
+        DataFrame.unionByName,
+        (
+            _recall_batch(
+                fam, corpus, _anchor_batch(fam, corpus, b), ivf_scored
+            ).select(F.lit(b).alias("batch_id"), "*")
+            for b in range(_AMORT_BATCHES)
+        ),
+    )
+
+
+def _triplets(fam: _Family, corpus: DataFrame) -> DataFrame:
+    """The triplet tail: batch 0 scored EXACTLY, kept by _keep, and
+    split into the positive leg (its candidate ids minus the
+    same-key one) and the negative leg, joined per anchor with
+    margin = pos_cos - neg_cos. The kept frame (≤ negs+1 rows per
+    anchor) is pinned, so AQE broadcasts the pos×neg join; an anchor
+    with no positive drops out (inner join), as in the oracle."""
+    kept = _keep(fam, _score(fam, corpus, _anchor_batch(fam, corpus, 0)))
+
+    def ids(leg: str, cols) -> list:
+        # cand_id -> pos_id, c_chunk -> neg_chunk, ...
+        return [F.col(c).alias(f"{leg}_{c.split('_', 1)[1]}") for c in cols]
+
+    pos_ids = [c for i, c in zip(fam.ids, fam.cand) if i != fam.neg]
+    pos = kept.filter(~F.col("is_neg")).select(
+        fam.anchor_out, *ids("pos", pos_ids), F.col("cos").alias("pos_cos")
+    )
+    neg = kept.filter(F.col("is_neg")).select(
+        fam.anchor_out,
+        F.col("rank").alias("neg_rank"),
+        *ids("neg", fam.cand),
+        F.col("cos").alias("neg_cos"),
+    )
+    return neg.join(pos, fam.anchor_out).select(
+        fam.anchor_out,
+        *pos.columns[1:],
+        *neg.columns[1:],
+        (F.col("pos_cos") - F.col("neg_cos")).alias("margin"),
     )
 
 
@@ -2035,85 +2221,6 @@ def _recall_sql_tail(
     )
 
 
-def _hn_kept_ann(
-    spark: SparkSession, sf_dir: str, assign: DataFrame | None = None
-) -> DataFrame:
-    """The PRODUCTION mining leg: candidates from the fixed-k=32 IVF
-    (ann_ivf_fixed_k's codebook, nprobe=2) instead of the full
-    corpus — each anchor scores only its two nearest cells (~6% of
-    the corpus at k=32), via a cell equi-join against the broadcast
-    probe batch; the mining (salted rank, pos/neg keep, pin) is
-    IDENTICAL downstream. IVF was chosen over sign-LSH empirically:
-    on this corpus the 8-plane buckets recall ~3% of the exact kept
-    set while nprobe=2 IVF recalls ~74% scanning 4x less than even
-    a 4-bucket LSH (which managed 43%) — nearest-centroid cells
-    track cosine structure; random hyperplane signs on near-random
-    64-dim vectors do not. This is the leg a 100 TB run keeps; the
-    exact scorer exists only to measure its recall.
-
-    ``assign`` is the cost knob that makes this a win: pass the
-    PREBUILT (vec_id, label, v, cid) inverted file (what
-    ep9_vector_index_pipeline maintains) and the per-batch cost is
-    probes (40 x 32) + probed-cell scoring (~6% of a corpus pass) +
-    the salted rank — measured 16x under the exact scorer's corpus
-    pass at sf10. Built INLINE (the default here, and what the
-    registered recall query must do to stay self-contained), the
-    assignment itself costs a 32-centroid corpus pass — nearly the
-    exact scorer's 40-anchor pass, so the inline form roughly
-    breaks even: mining ONE fixed batch cannot amortize an index
-    build. Production mines a stream of batches against the same
-    index; the exact scorer pays its full corpus pass PER BATCH."""
-    e, anchors = _hn_frames(spark, sf_dir)
-    cent = _hn_centroids(e)
-    if assign is None:
-        assign = _hn_ivf_assign(e, cent)
-    # The anchor frame is _hn_frames' — the SAME definition the
-    # exact recall baseline mines, by construction.
-    return _hn_mine(_hn_score_ann(assign, cent, anchors))
-
-
-def _hn_centroids(e: DataFrame) -> DataFrame:
-    """(cid, cv): the fixed-k=32 codebook — ann_ivf_fixed_k's
-    deterministic first-_FIXED_K-vectors convention."""
-    return e.filter(F.col("vec_id") < _FIXED_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-
-
-def _hn_score_ann(
-    assign: DataFrame,
-    cent: DataFrame,
-    anchors: DataFrame,
-    probes: DataFrame | None = None,
-) -> DataFrame:
-    """(anchor_id, cand_id, is_neg, cos): the IVF candidate scoring
-    leg — each anchor's nprobe nearest cells equi-joined against the
-    inverted file ``assign``, so only ~nprobe/k of the corpus is
-    scored per batch. This is the PER-BATCH cost of the amortized
-    production shape; ``assign`` is the once-built index. Pass
-    ``probes`` to reuse an already-derived probe frame (the cellpart
-    form computes it once to push the cid set as a partition
-    filter)."""
-    if probes is None:
-        probes = _ivf_probes(
-            anchors, cent, "anchor_id", ("anchor_label", "va")
-        )
-    # Norms fold once per side before the probed-cell fan-out join
-    # (guide §2.2) — same per-pair expression tree, bit-identical.
-    return assign.withColumn("nv", V.norm(F.col("v"))).join(
-        F.broadcast(probes.withColumn("na", V.norm(F.col("va")))),
-        (F.col("cid") == F.col("pcid"))
-        & (F.col("vec_id") != F.col("anchor_id")),
-    ).select(
-        "anchor_id",
-        F.col("vec_id").alias("cand_id"),
-        (F.col("label") != F.col("anchor_label")).alias("is_neg"),
-        (
-            V.dot(F.col("va"), F.col("v")) / (F.col("na") * F.col("nv"))
-        ).alias("cos"),
-    )
-
-
 @register("ann_hard_negatives", oracle=_HN_ORACLE)
 def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-training TRIPLET MINING (DPR / SimCSE / E5-style,
@@ -2139,39 +2246,19 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition key beats two windows over two filtered copies), and
     the ranking is the SALTED two-phase top-k (_salted_topk_rank —
     a plain per-anchor window would sort the whole scored corpus on
-    one reducer per anchor at 100 TB). The
-    kept frame (≤ {_HN_NEGS}+1 rows per anchor) is pinned before the
-    pos×neg join, which AQE broadcasts. This exact scorer is the
-    recall baseline; at 100 TB the candidate set would come from the
-    LSH/IVF buckets (ann_lsh_bucketed / ann_ivf_fixed_k) with
-    identical downstream mining.
+    one reducer per anchor at 100 TB). The kept frame (≤ 3+1 rows
+    per anchor) is pinned before the pos×neg join, which AQE
+    broadcasts (_triplets). This exact scorer is the recall
+    baseline; at 100 TB the candidate set comes from the IVF cells
+    (ann_hard_negatives_ann and its amortized/persisted/cellpart
+    forms) with identical downstream mining.
 
     Cosine folds are left-to-right → bit-identical to the oracle;
     the margin is a single double subtraction of two bit-identical
     values, so it hash-matches too.
 
     Reference parity: beyond-reference (north-star extension)."""
-    kept = _hn_kept_exact(spark, sf_dir)
-    pos = kept.filter(~F.col("is_neg")).select(
-        "anchor_id",
-        F.col("cand_id").alias("pos_id"),
-        F.col("cos").alias("pos_cos"),
-    )
-    neg = kept.filter(F.col("is_neg")).select(
-        "anchor_id",
-        F.col("rank").alias("neg_rank"),
-        F.col("cand_id").alias("neg_id"),
-        F.col("cos").alias("neg_cos"),
-    )
-    return neg.join(pos, "anchor_id").select(
-        "anchor_id",
-        "pos_id",
-        "pos_cos",
-        "neg_rank",
-        "neg_id",
-        "neg_cos",
-        (F.col("pos_cos") - F.col("neg_cos")).alias("margin"),
-    )
+    return _triplets(_HN, _hn_corpus(spark, sf_dir))
 
 
 # ------------------- hard-negative mining, IVF candidate path
@@ -2180,10 +2267,10 @@ _HN_ANN_ORACLE = f"""
 WITH {_HN_EXACT_CTES},
 keep_x AS (
     SELECT anchor_id, is_neg, cand_id FROM ranked
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
+    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN.negs})
 ),
 cent AS (
-    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
+    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_HN.codebook}
 ),
 assign AS (
     SELECT vec_id, label, v, cid FROM (
@@ -2205,7 +2292,7 @@ probes AS (
                             c.cid ASC
                ) AS rn
         FROM e CROSS JOIN cent c
-        WHERE e.vec_id < {_HN_ANCHORS}
+        WHERE e.vec_id < {_HN.batch}
     ) WHERE rn <= {_IVF_NPROBE}
 ),
 scored_a AS (
@@ -2223,7 +2310,7 @@ ranked_a AS (
 ),
 keep_a AS (
     SELECT anchor_id, is_neg, cand_id FROM ranked_a
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
+    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN.negs})
 ),
 {_recall_sql_tail(["anchor_id", "is_neg", "cand_id"],
                   ["anchor_id", "is_neg"])}
@@ -2242,38 +2329,37 @@ def ann_hard_negatives_ann(
     its two nearest cells, ~6% of the corpus; candidate generation
     is a cell equi-join against the broadcast probe batch, corpus
     assignment the map-side broadcast-argmax), feed the IDENTICAL
-    _mine_pos_neg salted ranking, and the kept triplet set is
-    diffed against the exact full-corpus-scored kept set: per
-    (anchor, leg) hits / truth / recall — the positive leg and the
-    hard-negative leg measured separately, since candidate loss
-    hits them differently (a same-label positive may simply not
-    live in the anchor's probed cells). Measured at sf0.01: 74%
-    overall (pos 60%, neg 79%) scanning ~6%; the sign-LSH
-    alternative managed 3% at the same plane count that serves
-    ann_lsh_bucketed, and only 43% even at 4 buckets (25% scanned) —
-    see _hn_kept_ann's docstring.
+    _keep salted ranking, and the kept triplet set is diffed against
+    the exact full-corpus-scored kept set: per (anchor, leg) hits /
+    truth / recall — the positive leg and the hard-negative leg
+    measured separately, since candidate loss hits them differently
+    (a same-label positive may simply not live in the anchor's
+    probed cells). Measured at sf0.01: 74% overall (pos 60%, neg
+    79%) scanning ~6%; the sign-LSH alternative managed 3% at the
+    same plane count that serves ann_lsh_bucketed, and only 43% even
+    at 4 buckets (25% scanned) — see _score_ivf's docstring.
 
     Exact-double cosines + unique-cid tiebreaks keep the cell
     assignment identical across engines, so the kept sets and the
-    recall fractions value-hash. Scale: the exact leg exists
-    only to MEASURE recall and is dropped in production, leaving
-    _hn_kept_ann — one cell-pruned scoring pass + the salted
-    two-phase rank (the sf10 spot sweep times that leg standalone
-    against the exact form's wall).
+    recall fractions value-hash. Scale: the exact leg exists only to
+    MEASURE recall and is dropped in production, leaving the
+    _score_ivf leg — one cell-pruned scoring pass + the salted
+    two-phase rank. The index is built INLINE here, so this single
+    batch cannot amortize it (ann_hard_negatives_amortized does).
 
     Reference parity: beyond-reference (north-star extension)."""
-    exact_kept = _hn_kept_exact(spark, sf_dir).select(
-        "anchor_id", "is_neg", "cand_id"
+    e = _hn_corpus(spark, sf_dir)
+    cent = _codebook(_HN, e)
+    assign = _inverted_file(_HN, e, cent)
+    return _recall_batch(
+        _HN,
+        e,
+        _anchor_batch(_HN, e, 0),
+        lambda a: _score_ivf(_HN, e, assign, cent, a),
     )
-    ann_kept = _hn_kept_ann(spark, sf_dir).select(
-        "anchor_id", "is_neg", "cand_id"
-    )
-    return _recall_vs_exact(exact_kept, ann_kept, ["anchor_id", "is_neg"])
 
 
 # --------------- hard-negative mining, AMORTIZED-index production shape
-
-_HN_AMORT_BATCHES = 2  # distinct anchor batches mined against ONE index
 
 
 def _hn_amort_oracle() -> str:
@@ -2287,7 +2373,7 @@ def _hn_amort_oracle() -> str:
     FROM embeddings
 ),
 cent AS (
-    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_FIXED_K}
+    SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < {_HN.codebook}
 ),
 assign AS (
     SELECT vec_id, label, v, cid FROM (
@@ -2302,8 +2388,8 @@ assign AS (
 )"""
     ]
     finals = []
-    for b in range(_HN_AMORT_BATCHES):
-        lo, hi = b * _HN_ANCHORS, (b + 1) * _HN_ANCHORS
+    for b in range(_AMORT_BATCHES):
+        lo, hi = b * _HN.batch, (b + 1) * _HN.batch
         ctes.append(
             f"""a{b} AS (
     SELECT vec_id AS anchor_id, label AS anchor_label, v AS va
@@ -2323,7 +2409,7 @@ ranked_x{b} AS (
 ),
 keep_x{b} AS (
     SELECT anchor_id, is_neg, cand_id FROM ranked_x{b}
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
+    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN.negs})
 ),
 probes{b} AS (
     SELECT anchor_id, anchor_label, va, cid AS pcid FROM (
@@ -2351,7 +2437,7 @@ ranked_a{b} AS (
 ),
 keep_a{b} AS (
     SELECT anchor_id, is_neg, cand_id FROM ranked_a{b}
-    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN_NEGS})
+    WHERE (NOT is_neg AND rank = 1) OR (is_neg AND rank <= {_HN.negs})
 ),
 {_recall_ctes(["anchor_id", "is_neg", "cand_id"],
               ["anchor_id", "is_neg"], suffix=str(b))}"""
@@ -2364,41 +2450,6 @@ keep_a{b} AS (
             )
         )
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(finals)
-
-
-def _hn_recall_over_batches(e: DataFrame, ann_kept_fn) -> DataFrame:
-    """The shared amortized mining loop: _HN_AMORT_BATCHES fixed
-    anchor batches, each mined by the exact full-corpus scorer (the
-    recall baseline production drops) and by ``ann_kept_fn(anchors)
-    -> scored frame`` (the candidate path under test), both through
-    the identical _hn_mine skeleton, recall-diffed per (anchor, leg)
-    and union'd with a batch_id tag. The three index forms — pinned
-    (amortized), persisted-flat, cell-partitioned — differ ONLY in
-    where the index lives and how much of it a batch reads; this one
-    loop is the structural proof the kept sets cannot."""
-    out = None
-    for b in range(_HN_AMORT_BATCHES):
-        anchors = _hn_anchor_batch(
-            e, b * _HN_ANCHORS, (b + 1) * _HN_ANCHORS
-        )
-        exact_kept = _hn_mine(_hn_score_exact(e, anchors)).select(
-            "anchor_id", "is_neg", "cand_id"
-        )
-        ann_kept = _hn_mine(ann_kept_fn(anchors)).select(
-            "anchor_id", "is_neg", "cand_id"
-        )
-        rec = _recall_vs_exact(
-            exact_kept, ann_kept, ["anchor_id", "is_neg"]
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "anchor_id",
-            "is_neg",
-            "n_hits",
-            "n_true",
-            "recall",
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
 
 
 @register("ann_hard_negatives_amortized", oracle=_hn_amort_oracle())
@@ -2424,18 +2475,18 @@ def ann_hard_negatives_amortized(
     recall-vs-exact oracle as the inline form, now also proving the
     kept sets are IDENTICAL whether the index is rebuilt per run or
     reused across batches (index reuse must not change results, only
-    cost — test_amortized_batch0_equals_inline pins batch 0's kept
-    set against _hn_kept_ann's). Both batches mine through the
-    identical _hn_mine skeleton; batch 0 is ann_hard_negatives_ann's
-    anchor slice, batch 1 the next _HN_ANCHORS vec_ids — distinct
-    batches, one index.
+    cost — test_amortized_batch0_equals_inline pins batch 0's recall
+    rows against ann_hard_negatives_ann's). Both batches mine
+    through the identical _keep; batch 0 is ann_hard_negatives_ann's
+    anchor slice, batch 1 the next 40 vec_ids — distinct batches,
+    one index.
 
     Honest recall note: the factory embeddings are ISOTROPIC
     (same-label mean cosine 0.0016 ≈ cross-label 0.0003 at sf0.01),
     so exact nearest neighbors are near-arbitrary directions and any
     cell-pruned method sits near its scan fraction; batch 0 reads
     higher (pos 60% / neg 79%) partly because its anchor slice
-    overlaps the first-_FIXED_K codebook (self-cell effect), batch 1
+    overlaps the first-32 codebook (self-cell effect), batch 1
     (disjoint from the codebook) reads the floor (pos 15% / neg 25%
     at sf0.01). On clustered production embeddings the cells track
     cosine structure and both batches ride it; the per-batch oracle
@@ -2448,14 +2499,14 @@ def ann_hard_negatives_amortized(
     exact recall baseline, which production drops.
 
     Reference parity: beyond-reference (north-star extension)."""
-    e, _ = _hn_frames(spark, sf_dir)
-    cent = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent = _codebook(_HN, e)
     # The index: built once, pinned eagerly so every batch's plan
     # consumes the materialized frame instead of re-deriving the
     # corpus-scale assignment (the racing-consumers pin discipline).
-    assign = _hn_ivf_assign(e, cent).localCheckpoint(eager=True)
-    return _hn_recall_over_batches(
-        e, lambda anchors: _hn_score_ann(assign, cent, anchors)
+    assign = _inverted_file(_HN, e, cent).localCheckpoint(eager=True)
+    return _recall_over_batches(
+        _HN, e, lambda a: _score_ivf(_HN, e, assign, cent, a)
     )
 
 
@@ -2472,8 +2523,7 @@ def _scratch_base(sf_dir: str, name: str) -> str:
     import os
     import shutil
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    base = f"{scratch}/{name}_{os.path.basename(sf_dir.rstrip('/'))}"
+    base = f"{SCRATCH}/{name}_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(base, ignore_errors=True)
     return base
 
@@ -2541,13 +2591,13 @@ def ann_hard_negatives_persisted(
 
     Reference parity: beyond-reference (north-star extension)."""
     base = _scratch_base(sf_dir, "hn_ivf_index")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e, cent_built),
+            "assign": _inverted_file(_HN, e, cent_built),
             "centroids": cent_built,
         },
     )
@@ -2555,8 +2605,8 @@ def ann_hard_negatives_persisted(
     # anchors are the INCOMING batch (arrives with its vectors); the
     # exact full-corpus leg is the recall baseline production drops —
     # neither is part of the persisted index
-    return _hn_recall_over_batches(
-        e, lambda anchors: _hn_score_ann(assign, cent, anchors)
+    return _recall_over_batches(
+        _HN, e, lambda a: _score_ivf(_HN, e, assign, cent, a)
     )
 
 
@@ -2631,8 +2681,8 @@ def ann_index_incremental_update(
     from innercircle_etl_spark.operators.atomic_swap import write_replace
 
     base = _scratch_base(sf_dir, "hn_ivf_inc")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _INC_BATCH_MOD == _INC_BATCH_REM
     # day 0: index of everything seen so far, persisted (corpus pass,
     # paid once) — the codebook is the fixed first-k convention and
@@ -2641,7 +2691,7 @@ def ann_index_incremental_update(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built),
+            "assign": _inverted_file(_HN, e.filter(~is_batch), cent_built),
             "centroids": cent_built,
         },
     )
@@ -2652,7 +2702,7 @@ def ann_index_incremental_update(
     # FileNotFound window and must recover_table+retry (the
     # swap_into_place contract); this single-session query never
     # races itself.
-    batch_assign = _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
+    batch_assign = _inverted_file(_HN, e.filter(is_batch), idx["centroids"])
     write_replace(
         idx["assign"].unionByName(batch_assign), f"{base}/assign", "merged"
     )
@@ -2732,22 +2782,22 @@ def ann_hard_negatives_cellpart(
 
     Reference parity: beyond-reference (north-star extension)."""
     base = _scratch_base(sf_dir, "hn_ivf_cellpart")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e, cent_built),
+            "assign": _inverted_file(_HN, e, cent_built),
             "centroids": cent_built,
         },
         partition_by={"assign": "cid"},
     )
     assign, cent = idx["assign"], idx["centroids"]
 
-    def kept(anchors: DataFrame) -> DataFrame:
+    def pruned(anchors: DataFrame) -> DataFrame:
         probes = _ivf_probes(
-            anchors, cent, "anchor_id", ("anchor_label", "va")
+            anchors, cent, _HN.anchor_out, ("anchor_label", "va")
         )
         # bounded driver collect (<= batch x nprobe ids) -> static
         # IN-filter on the partition column -> the FileScan lists
@@ -2755,14 +2805,16 @@ def ann_hard_negatives_cellpart(
         cids = sorted(
             r.pcid for r in probes.select("pcid").distinct().collect()
         )
-        return _hn_score_ann(
+        return _score_ivf(
+            _HN,
+            e,
             assign.filter(F.col("cid").isin(cids)),
             cent,
             anchors,
             probes=probes,
         )
 
-    return _hn_recall_over_batches(e, kept)
+    return _recall_over_batches(_HN, e, pruned)
 
 
 _CELLINC_MOD = 100  # arriving batch = vec_id % MOD == REM (sparse —
@@ -2811,14 +2863,14 @@ def ann_index_cellpart_update(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_cellinc")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built),
+            "assign": _inverted_file(_HN, e.filter(~is_batch), cent_built),
             "centroids": cent_built,
         },
         partition_by={"assign": "cid"},
@@ -2828,7 +2880,7 @@ def ann_index_cellpart_update(
     # — consumed twice (touched-cell collect + merge), and the merge
     # must not re-derive it WHILE its own input partitions swap
     batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
+        _inverted_file(_HN, e.filter(is_batch), idx["centroids"])
         .select("vec_id", "label", "v", F.col("cid").cast("long").alias("cid"))
         .localCheckpoint(eager=True)
     )
@@ -2888,17 +2940,17 @@ def ann_index_versioned_update(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_versioned")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _INC_BATCH_MOD == _INC_BATCH_REM
     idx = _persisted_index(spark, f"{base}/aux", {"centroids": cent_built})
     cent = idx["centroids"]
     table = f"{base}/assign"
     publish_version(
-        _hn_ivf_assign(e.filter(~is_batch), cent), table, "day0"
+        _inverted_file(_HN, e.filter(~is_batch), cent), table, "day0"
     )
     day0 = read_current(spark, table)
-    batch_assign = _hn_ivf_assign(e.filter(is_batch), cent)
+    batch_assign = _inverted_file(_HN, e.filter(is_batch), cent)
     publish_version(day0.unionByName(batch_assign), table, "day1")
     return _index_manifest(read_current(spark, table), cent)
 
@@ -2948,8 +3000,8 @@ def ann_index_versioned_cellpart_update(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_vcellpart")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _INC_BATCH_MOD == _INC_BATCH_REM
     idx = _persisted_index(spark, f"{base}/aux", {"centroids": cent_built})
     cent = idx["centroids"]
@@ -2958,13 +3010,13 @@ def ann_index_versioned_cellpart_update(
         "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
     ]
     publish_version(
-        _hn_ivf_assign(e.filter(~is_batch), cent),
+        _inverted_file(_HN, e.filter(~is_batch), cent),
         table,
         "day0",
         partition_by="cid",
     )
     batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), cent)
+        _inverted_file(_HN, e.filter(is_batch), cent)
         .select(*cast_cols)
         .localCheckpoint(eager=True)
     )
@@ -3060,8 +3112,8 @@ def ann_index_cellpart_compact(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_cellcomp")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
     # day-0 BUILD writes the compact layout: one file per cell
     # (repartition by cid -> each cid in exactly one task ->
@@ -3073,7 +3125,7 @@ def ann_index_cellpart_compact(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built)
+            "assign": _inverted_file(_HN, e.filter(~is_batch), cent_built)
             .repartition(_FIXED_K, "cid"),
             "centroids": cent_built,
         },
@@ -3081,7 +3133,7 @@ def ann_index_cellpart_compact(
     )
     apath = f"{base}/assign"
     batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
+        _inverted_file(_HN, e.filter(is_batch), idx["centroids"])
         .select(
             "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
         )
@@ -3180,7 +3232,8 @@ def _kill_survivors(
     rewrite cells the kill-list fully drained (they take the drop
     path). All collects are kill-batch-bounded."""
     kill_assign = (
-        _hn_ivf_assign(
+        _inverted_file(
+            _HN,
             e.filter(F.col("vec_id") % _DEL_MOD == _DEL_REM), cent
         )
         .select("vec_id", F.col("cid").cast("long").alias("cid"))
@@ -3267,13 +3320,13 @@ def ann_index_cellpart_delete(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_celldel")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e, cent_built),
+            "assign": _inverted_file(_HN, e, cent_built),
             "centroids": cent_built,
         },
         partition_by={"assign": "cid"},
@@ -3345,13 +3398,13 @@ def ann_index_versioned_delete(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_vdel")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     idx = _persisted_index(spark, f"{base}/aux", {"centroids": cent_built})
     cent = idx["centroids"]
     table = f"{base}/assign"
     publish_version(
-        _hn_ivf_assign(e, cent), table, "day0", partition_by="cid"
+        _inverted_file(_HN, e, cent), table, "day0", partition_by="cid"
     )
     # shared kill-location pipeline against the LIVE (immutable)
     # version — one copy for both DELETE forms (_kill_survivors)
@@ -3417,8 +3470,8 @@ def ann_index_versioned_compact(
     )
 
     base = _scratch_base(sf_dir, "hn_ivf_vcomp")
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
     idx = _persisted_index(spark, f"{base}/aux", {"centroids": cent_built})
     cent = idx["centroids"]
@@ -3428,7 +3481,7 @@ def ann_index_versioned_compact(
     ]
     # day 0: the compact build (one file per cell), versioned
     publish_version(
-        _hn_ivf_assign(e.filter(~is_batch), cent).repartition(
+        _inverted_file(_HN, e.filter(~is_batch), cent).repartition(
             _FIXED_K, "cid"
         ),
         table,
@@ -3437,7 +3490,7 @@ def ann_index_versioned_compact(
     )
     # day 1: the append as a linked publish — touched cells fragment
     batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), cent)
+        _inverted_file(_HN, e.filter(is_batch), cent)
         .select(*cast_cols)
         .localCheckpoint(eager=True)
     )
@@ -3468,67 +3521,6 @@ def ann_index_versioned_compact(
 
 # --------------------------- ep13: contrastive pair construction
 
-_EP13_ANCHORS = 20  # fixed anchor-doc batch (the hard-negatives lesson)
-_EP13_NEGS = 2  # cross-document hard negatives per anchor
-
-
-def _ep13_anchor_batch(emb: DataFrame, lo: int, hi: int) -> DataFrame:
-    """(a_doc, va): one FIXED-size anchor batch — the first chunk of
-    docs [lo, hi). Batch size is a constant, never
-    corpus-proportional; the amortized shape streams these."""
-    return emb.filter(
-        (F.col("doc_id") >= lo)
-        & (F.col("doc_id") < hi)
-        & (F.col("chunk_idx") == 0)
-    ).select(F.col("doc_id").alias("a_doc"), F.col("v").alias("va"))
-
-
-def _ep13_anchors(emb: DataFrame) -> DataFrame:
-    """(a_doc, va): the FIXED anchor batch — the first chunk of the
-    first _EP13_ANCHORS docs (never corpus-proportional)."""
-    return _ep13_anchor_batch(emb, 0, _EP13_ANCHORS)
-
-
-def _ep13_scored_exact(emb: DataFrame, anchors: DataFrame) -> DataFrame:
-    """(a_doc, c_doc, c_chunk, is_neg, cos): every non-anchor chunk
-    scored against the broadcast anchor batch — the exact (recall
-    baseline) candidate set.
-
-    cos = dot/(norm(va)*norm(v)) with BOTH norms computed on their
-    input side BEFORE the |anchors|-way fan-out join (guide §2.2:
-    shrink per-row work before a multiplying operator) — V.cosine
-    inside the select would refold each chunk's norm once per anchor.
-    Same expression tree per pair (dot, the two sqrt folds, the
-    multiply order), so scores stay bit-identical to the oracle."""
-    return emb.withColumn("nv", V.norm(F.col("v"))).join(
-        F.broadcast(anchors.withColumn("na", V.norm(F.col("va")))),
-        ~((F.col("doc_id") == F.col("a_doc")) & (F.col("chunk_idx") == 0)),
-    ).select(
-        "a_doc",
-        F.col("doc_id").alias("c_doc"),
-        F.col("chunk_idx").alias("c_chunk"),
-        (F.col("doc_id") != F.col("a_doc")).alias("is_neg"),
-        (
-            V.dot(F.col("va"), F.col("v"))
-            / (F.col("na") * F.col("nv"))
-        ).alias("cos"),
-    )
-
-
-def _ep13_mine(scored: DataFrame) -> DataFrame:
-    """ep13's mining: salted rank over (a_doc, is_neg), keep the
-    rank-1 positive + top-_EP13_NEGS negatives, pinned."""
-    return _mine_pos_neg(
-        scored,
-        "a_doc",
-        [
-            F.col("cos").desc(),
-            F.col("c_doc").asc(),
-            F.col("c_chunk").asc(),
-        ],
-        _EP13_NEGS,
-    )
-
 
 # Exact ep13 CTE chain (chunks → emb → anchors → full-chunk-corpus
 # scored → ranked), shared between the ep13_contrastive_pairs oracle
@@ -3541,7 +3533,7 @@ def _ep13_exact_ctes() -> str:
     return f"""{CHUNK_CTES_SQL},
 {_RAG_EMB_CTE},
 a AS (SELECT doc_id AS a_doc, v AS va FROM emb
-      WHERE doc_id < {_EP13_ANCHORS} AND chunk_idx = 0),
+      WHERE doc_id < {_EP13.batch} AND chunk_idx = 0),
 scored AS (
     SELECT a.a_doc, c.doc_id AS c_doc, c.chunk_idx AS c_chunk,
            (c.doc_id = a.a_doc) AS is_pos,
@@ -3564,7 +3556,7 @@ pos AS (
 neg AS (
     SELECT a_doc, rnk AS neg_rank, c_doc AS neg_doc,
            CAST(c_chunk AS INTEGER) AS neg_chunk, cos AS neg_cos
-    FROM ranked WHERE NOT is_pos AND rnk <= {_EP13_NEGS})
+    FROM ranked WHERE NOT is_pos AND rnk <= {_EP13.negs})
 SELECT n.a_doc AS anchor_doc, p.pos_chunk, p.pos_cos,
        n.neg_rank, n.neg_doc, n.neg_chunk, n.neg_cos,
        p.pos_cos - n.neg_cos AS margin
@@ -3580,57 +3572,27 @@ def ep13_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared text_chunk_windows / _rag_chunk_embeddings builders) →
     per anchor chunk, the nearest OTHER crop of the SAME document
     (the co-document positive — Contriever's independent-cropping
-    signal) plus the {_EP13_NEGS} nearest crops of OTHER documents
+    signal) plus the 2 nearest crops of OTHER documents
     (cross-document hard negatives), with triplet margins. This is
     the embedding-model training-data composite the ep series was
     missing: ep9 builds the index, ep10 retrieves, ep13 builds the
     TRAINING PAIRS.
 
-    Plan/scale: the anchor batch is FIXED ({_EP13_ANCHORS} docs'
-    first chunks — not corpus-proportional; the ann_hard_negatives
-    sf1 lesson), so scoring is one linear corpus pass against a
-    broadcast batch; ONE ranking shuffle with is_pos inside the
-    window partition key serves both the positive and negative legs
-    (the ann_hard_negatives shape, reused deliberately — including
-    its salted two-phase top-k ranking); the kept
-    frame (≤ {_EP13_NEGS}+1 rows per anchor) is pinned before the
-    AQE-broadcast pos×neg join. Anchors whose doc has a single
-    chunk drop out in BOTH engines (inner join to pos). The hash
-    embedding's dot/norm² are exact doubles → scores and margins
-    hash-match the oracle.
+    Plan/scale: the anchor batch is FIXED (20 docs' first chunks —
+    not corpus-proportional; the ann_hard_negatives sf1 lesson), so
+    scoring is one linear corpus pass against a broadcast batch; it
+    runs the SAME mining core as ann_hard_negatives (the _EP13
+    family: _score, _keep's salted two-phase top-k with is_neg in
+    the partition key, _triplets' pinned kept frame and AQE-broadcast
+    pos×neg join). Anchors whose doc has a single chunk drop out in
+    BOTH engines (inner join to pos). The hash embedding's dot/norm²
+    are exact doubles → scores and margins hash-match the oracle.
 
     Reference parity: beyond-reference (north-star extension)."""
-    emb = _rag_chunk_embeddings(spark, sf_dir)
-    kept = _ep13_mine(
-        _ep13_scored_exact(emb, _ep13_anchors(emb))
-    ).withColumnRenamed("rank", "rnk")
-    pos = kept.filter(~F.col("is_neg")).select(
-        "a_doc",
-        F.col("c_chunk").alias("pos_chunk"),
-        F.col("cos").alias("pos_cos"),
-    )
-    neg = kept.filter(F.col("is_neg")).select(
-        "a_doc",
-        F.col("rnk").alias("neg_rank"),
-        F.col("c_doc").alias("neg_doc"),
-        F.col("c_chunk").alias("neg_chunk"),
-        F.col("cos").alias("neg_cos"),
-    )
-    return neg.join(pos, "a_doc").select(
-        F.col("a_doc").alias("anchor_doc"),
-        "pos_chunk",
-        "pos_cos",
-        "neg_rank",
-        "neg_doc",
-        "neg_chunk",
-        "neg_cos",
-        (F.col("pos_cos") - F.col("neg_cos")).alias("margin"),
-    )
+    return _triplets(_EP13, _rag_chunk_embeddings(spark, sf_dir))
 
 
 # ------------- ep13 contrastive pairs, production candidate path
-
-_EP13_IVF_K = 32  # chunk-space codebook: first chunk of docs 0..31
 
 
 def _ep13_ann_oracle() -> str:
@@ -3640,11 +3602,11 @@ def _ep13_ann_oracle() -> str:
 WITH {_ep13_exact_ctes()},
 keep_x AS (
     SELECT a_doc, NOT is_pos AS is_neg, c_doc, c_chunk FROM ranked
-    WHERE (is_pos AND rnk = 1) OR (NOT is_pos AND rnk <= {_EP13_NEGS})
+    WHERE (is_pos AND rnk = 1) OR (NOT is_pos AND rnk <= {_EP13.negs})
 ),
 cent AS (
     SELECT doc_id AS cid, v AS cv FROM emb
-    WHERE doc_id < {_EP13_IVF_K} AND chunk_idx = 0
+    WHERE doc_id < {_EP13.codebook} AND chunk_idx = 0
 ),
 assign AS (
     SELECT doc_id, chunk_idx, v, cid FROM (
@@ -3689,7 +3651,7 @@ ranked_a AS (
 ),
 keep_a AS (
     SELECT a_doc, is_neg, c_doc, c_chunk FROM ranked_a
-    WHERE (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {_EP13_NEGS})
+    WHERE (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {_EP13.negs})
 ),
 {_recall_sql_tail(["a_doc", "is_neg", "c_doc", "c_chunk"],
                   ["a_doc", "is_neg"], {"a_doc": "anchor_doc"})}
@@ -3712,26 +3674,26 @@ def ep13_contrastive_pairs_ann(
       CONSTRUCTION (the exact is_neg=false partition contains only
       same-doc rows), at per-document cost.
     - HARD NEGATIVES are globally-nearest other-doc crops — found by
-      fixed-k={ivfk} IVF over the chunk space (codebook = first
-      chunk of docs 0..{ivfk1}, nprobe={nprobe}): measured 40/40
-      negative recall at sf0.01. Sign-LSH was rejected here AGAIN
-      (17-28/55 overall, 0/15 positives at the registered plane
-      counts): md5-hash embeddings are uncorrelated even for
-      overlapping crops, so bucket signs carry no signal while
-      nearest-centroid cells still track raw cosine geometry. An
-      IVF-only candidate set was ALSO rejected — it finds the
-      negatives (40/40) but positives at chance (~nprobe/k): a
-      same-doc crop is NOT globally near its anchor in hash space.
-      The union encodes the right retrieval key per leg: doc_id for
-      positives, geometry for negatives.
+      fixed-k=32 IVF over the chunk space (codebook = first chunk of
+      docs 0..31, nprobe=2): measured 40/40 negative recall at
+      sf0.01. Sign-LSH was rejected here AGAIN (17-28/55 overall,
+      0/15 positives at the registered plane counts): md5-hash
+      embeddings are uncorrelated even for overlapping crops, so
+      bucket signs carry no signal while nearest-centroid cells
+      still track raw cosine geometry. An IVF-only candidate set was
+      ALSO rejected — it finds the negatives (40/40) but positives
+      at chance (~nprobe/k): a same-doc crop is NOT globally near
+      its anchor in hash space. The union encodes the right
+      retrieval key per leg: doc_id for positives, geometry for
+      negatives (_score_ivf's same_key_pos leg).
 
-    Both legs feed the IDENTICAL _ep13_mine salted ranking; the kept
-    set is diffed against the exact kept set per (anchor, leg).
+    Both legs feed the IDENTICAL _keep salted ranking; the kept set
+    is diffed against the exact kept set per (anchor, leg).
     Exact-double cosines + unique-cid tiebreaks keep everything
     hash-exact. Scale: the exact leg exists only to MEASURE recall;
     production keeps the union legs — same-doc equi-join (O(chunks
-    per doc) per anchor) + amortizable IVF assignment + ~{nprobe}/
-    {ivfk} of a corpus pass, vs a full corpus pass per anchor batch.
+    per doc) per anchor) + amortizable IVF assignment + ~2/32 of a
+    corpus pass, vs a full corpus pass per anchor batch.
 
     Reference parity: beyond-reference (north-star extension)."""
     emb = _rag_chunk_embeddings(spark, sf_dir).localCheckpoint(
@@ -3739,68 +3701,13 @@ def ep13_contrastive_pairs_ann(
         # leg all read it — without the pin the chunk/md5 build
         # would run five times (racing-consumer lesson)
     )
-    anchors = _ep13_anchors(emb)
-    exact_kept = _ep13_kept_exact(emb, anchors)
-    cent = _ep13_centroids(emb)
-    assign = _ivf_assign(emb, cent, ["doc_id", "chunk_idx"])
-    ann_kept = _ep13_kept_ann(emb, assign, cent, anchors)
-    return _recall_vs_exact(
-        exact_kept,
-        ann_kept,
-        ["a_doc", "is_neg"],
-        {"a_doc": "anchor_doc"},
-    )
-
-
-def _ep13_centroids(emb: DataFrame) -> DataFrame:
-    """(cid, cv): ep13's fixed-k chunk-space codebook — the first
-    chunk of docs 0.._EP13_IVF_K-1."""
-    return emb.filter(
-        (F.col("doc_id") < _EP13_IVF_K) & (F.col("chunk_idx") == 0)
-    ).select(F.col("doc_id").alias("cid"), F.col("v").alias("cv"))
-
-
-def _ep13_kept_exact(emb: DataFrame, anchors: DataFrame) -> DataFrame:
-    """The exact full-chunk-corpus-scored kept set for one anchor
-    batch, narrowed to identifying columns — a corpus pass PER
-    BATCH (the cost the candidate path amortizes away)."""
-    return _ep13_mine(_ep13_scored_exact(emb, anchors)).select(
-        "a_doc", "is_neg", "c_doc", "c_chunk"
-    )
-
-
-def _ep13_kept_ann(
-    emb: DataFrame,
-    assign: DataFrame,
-    cent: DataFrame,
-    anchors: DataFrame,
-) -> DataFrame:
-    """The production candidate-path kept set for one anchor batch:
-    same-doc equi-join positives ∪ IVF-cell hard negatives, through
-    the identical _ep13_mine ranking. ``assign`` is the once-built
-    inverted file — the per-batch cost is the equi-joins + ~nprobe/k
-    of a corpus pass."""
-    probes = _ivf_probes(anchors, cent, "a_doc", ("va",))
-    # columns are immutable expression trees — one list serves both
-    # candidate legs
-    cand_cols = [
-        "a_doc",
-        F.col("doc_id").alias("c_doc"),
-        F.col("chunk_idx").alias("c_chunk"),
-        (F.col("doc_id") != F.col("a_doc")).alias("is_neg"),
-        V.cosine(F.col("va"), F.col("v")).alias("cos"),
-    ]
-    same_doc = emb.join(
-        F.broadcast(anchors),
-        (F.col("doc_id") == F.col("a_doc")) & (F.col("chunk_idx") != 0),
-    ).select(*cand_cols)
-    ivf_neg = assign.join(
-        F.broadcast(probes),
-        (F.col("cid") == F.col("pcid"))
-        & (F.col("doc_id") != F.col("a_doc")),
-    ).select(*cand_cols)
-    return _ep13_mine(same_doc.unionByName(ivf_neg)).select(
-        "a_doc", "is_neg", "c_doc", "c_chunk"
+    cent = _codebook(_EP13, emb)
+    assign = _inverted_file(_EP13, emb, cent)
+    return _recall_batch(
+        _EP13,
+        emb,
+        _anchor_batch(_EP13, emb, 0),
+        lambda a: _score_ivf(_EP13, emb, assign, cent, a),
     )
 
 
@@ -3818,7 +3725,7 @@ def _ep13_amort_oracle() -> str:
 {_RAG_EMB_CTE},
 cent AS (
     SELECT doc_id AS cid, v AS cv FROM emb
-    WHERE doc_id < {_EP13_IVF_K} AND chunk_idx = 0
+    WHERE doc_id < {_EP13.codebook} AND chunk_idx = 0
 ),
 assign AS (
     SELECT doc_id, chunk_idx, v, cid FROM (
@@ -3832,8 +3739,8 @@ assign AS (
 )"""
     ]
     finals = []
-    for b in range(_HN_AMORT_BATCHES):
-        lo, hi = b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
+    for b in range(_AMORT_BATCHES):
+        lo, hi = b * _EP13.batch, (b + 1) * _EP13.batch
         ctes.append(
             f"""a{b} AS (
     SELECT doc_id AS a_doc, v AS va FROM emb
@@ -3854,7 +3761,7 @@ ranked_x{b} AS (
 ),
 keep_x{b} AS (
     SELECT a_doc, NOT is_pos AS is_neg, c_doc, c_chunk FROM ranked_x{b}
-    WHERE (is_pos AND rnk = 1) OR (NOT is_pos AND rnk <= {_EP13_NEGS})
+    WHERE (is_pos AND rnk = 1) OR (NOT is_pos AND rnk <= {_EP13.negs})
 ),
 probes{b} AS (
     SELECT a_doc, va, cid AS pcid FROM (
@@ -3889,7 +3796,7 @@ ranked_a{b} AS (
 ),
 keep_a{b} AS (
     SELECT a_doc, is_neg, c_doc, c_chunk FROM ranked_a{b}
-    WHERE (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {_EP13_NEGS})
+    WHERE (NOT is_neg AND rnk = 1) OR (is_neg AND rnk <= {_EP13.negs})
 ),
 {_recall_ctes(["a_doc", "is_neg", "c_doc", "c_chunk"],
               ["a_doc", "is_neg"], suffix=str(b))}"""
@@ -3912,89 +3819,50 @@ def ep13_contrastive_pairs_amortized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """ep13's PRODUCTION shape: the chunk embeddings and the
-    fixed-k={ivfk} IVF inverted file are built ONCE and pinned, then
-    a SEQUENCE of fixed-{nanch}-doc anchor batches builds pairs
-    against them — the form a 100 TB training-data pipeline runs
-    (the index is ep9's maintained artifact; batches arrive as the
-    corpus grows). ep13_contrastive_pairs_ann proves the union
-    candidate path's recall but rebuilds the index inline per run;
-    here the per-batch cost is the same-doc equi-join + probes +
-    ~{nprobe}/{ivfk} of a corpus pass + the salted rank, and the
-    corpus-scale work (chunking, embedding, assignment) is paid once
-    across all batches (sf10 measured: 3.9 s/batch amortized vs
-    40.1 s/batch exact — SCALE.md round 10, the measurement this
-    registration promotes to an oracle-checked query).
+    fixed-k=32 IVF inverted file are built ONCE and pinned, then a
+    SEQUENCE of fixed-20-doc anchor batches builds pairs against
+    them — the form a 100 TB training-data pipeline runs (the index
+    is ep9's maintained artifact; batches arrive as the corpus
+    grows). ep13_contrastive_pairs_ann proves the union candidate
+    path's recall but rebuilds the index inline per run; here the
+    per-batch cost is the same-doc equi-join + probes + ~2/32 of a
+    corpus pass + the salted rank, and the corpus-scale work
+    (chunking, embedding, assignment) is paid once across all
+    batches (sf10 measured: 3.9 s/batch amortized vs 40.1 s/batch
+    exact — SCALE.md round 10, the measurement this registration
+    promotes to an oracle-checked query).
 
     Output: per (batch_id, anchor, leg) recall of the amortized
     candidate path against the exact full-corpus scorer — proving
     index reuse changes cost, never results (batch 0 reproduces
     ep13_contrastive_pairs_ann's rows exactly; batch 1 is the next
-    {nanch} docs, disjoint anchors against the SAME pinned index).
+    20 docs, disjoint anchors against the SAME pinned index).
     Measured at sf0.01: batch 0 pos 1.0 / neg 1.0, batch 1 pos 1.0 /
     neg 0.775. The positive leg is an equi-join — exact by
     construction in EVERY batch; the negative-leg dip is driven by
-    batch 1's PARTIAL codebook coverage: batch 0's {nanch} anchor
-    docs all sit inside the {ivfk}-doc codebook (docs 0..{ivfk1} —
-    their probes enjoy the self-cell effect), while batch 1 (docs
-    {nanch}..{nanch2m1}) is only partially covered — its 8 anchors
-    past doc {ivfk1} lose that effect and pay the cell-pruning floor
-    (contrast the hard-negatives family's 40/{hnk} split, where
-    batch 1 is TRULY codebook-disjoint) — far above the isotropic
-    hard-negative family's floor
-    because chunk-space cells do track the md5-hash cosine geometry,
-    but the per-batch oracle exists exactly so a deployment reads
-    this number on its own corpus instead of a fixture's.
+    batch 1's PARTIAL codebook coverage: batch 0's 20 anchor docs
+    all sit inside the 32-doc codebook (docs 0..31 — their probes
+    enjoy the self-cell effect), while batch 1 (docs 20..39) is only
+    partially covered — its 8 anchors past doc 31 lose that effect
+    and pay the cell-pruning floor (contrast the hard-negatives
+    family's 40/32 split, where batch 1 is TRULY codebook-disjoint)
+    — far above the isotropic hard-negative family's floor because
+    chunk-space cells do track the md5-hash cosine geometry, but the
+    per-batch oracle exists exactly so a deployment reads this
+    number on its own corpus instead of a fixture's.
 
     Reference parity: beyond-reference (north-star extension)."""
     emb = _rag_chunk_embeddings(spark, sf_dir).localCheckpoint(
         eager=True  # built once; anchors, exact legs, cent,
         # assignment and same-doc legs of every batch read it
     )
-    cent = _ep13_centroids(emb)
+    cent = _codebook(_EP13, emb)
     # the index: built once, pinned — every batch's plan consumes
     # the materialized inverted file (racing-consumer discipline)
-    assign = _ivf_assign(
-        emb, cent, ["doc_id", "chunk_idx"]
-    ).localCheckpoint(eager=True)
-    out = None
-    for b in range(_HN_AMORT_BATCHES):
-        anchors = _ep13_anchor_batch(
-            emb, b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
-        )
-        rec = _recall_vs_exact(
-            _ep13_kept_exact(emb, anchors),
-            _ep13_kept_ann(emb, assign, cent, anchors),
-            ["a_doc", "is_neg"],
-            {"a_doc": "anchor_doc"},
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "anchor_doc",
-            "is_neg",
-            "n_hits",
-            "n_true",
-            "recall",
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
-
-
-ep13_contrastive_pairs_amortized.__doc__ = (
-    ep13_contrastive_pairs_amortized.__doc__.format(
-        ivfk=_EP13_IVF_K,
-        ivfk1=_EP13_IVF_K - 1,
-        nprobe=_IVF_NPROBE,
-        nanch=_EP13_ANCHORS,
-        nanch2m1=2 * _EP13_ANCHORS - 1,
-        hnk=32,  # the hard-negatives family's fixed codebook size
+    assign = _inverted_file(_EP13, emb, cent).localCheckpoint(eager=True)
+    return _recall_over_batches(
+        _EP13, emb, lambda a: _score_ivf(_EP13, emb, assign, cent, a)
     )
-)
-
-
-ep13_contrastive_pairs_ann.__doc__ = (
-    ep13_contrastive_pairs_ann.__doc__.format(
-        ivfk=_EP13_IVF_K, ivfk1=_EP13_IVF_K - 1, nprobe=_IVF_NPROBE
-    )
-)
 
 
 @register("ep13_contrastive_pairs_persisted", oracle=_ep13_amort_oracle())
@@ -4036,35 +3904,16 @@ def ep13_contrastive_pairs_persisted(
         base,
         {"chunks": _rag_chunk_embeddings(spark, sf_dir)},
     )["chunks"]
-    cent_built = _ep13_centroids(chunks)
+    cent_built = _codebook(_EP13, chunks)
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _ivf_assign(
-                chunks, cent_built, ["doc_id", "chunk_idx"]
-            ),
+            "assign": _inverted_file(_EP13, chunks, cent_built),
             "centroids": cent_built,
         },
     )
     assign, cent = idx["assign"], idx["centroids"]
-    out = None
-    for b in range(_HN_AMORT_BATCHES):
-        anchors = _ep13_anchor_batch(
-            chunks, b * _EP13_ANCHORS, (b + 1) * _EP13_ANCHORS
-        )
-        rec = _recall_vs_exact(
-            _ep13_kept_exact(chunks, anchors),
-            _ep13_kept_ann(chunks, assign, cent, anchors),
-            ["a_doc", "is_neg"],
-            {"a_doc": "anchor_doc"},
-        ).select(
-            F.lit(b).alias("batch_id"),
-            "anchor_doc",
-            "is_neg",
-            "n_hits",
-            "n_true",
-            "recall",
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
+    return _recall_over_batches(
+        _EP13, chunks, lambda a: _score_ivf(_EP13, chunks, assign, cent, a)
+    )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from innercircle_etl_spark.plans.registry import (
+    SCRATCH,
     dsum,
     duck_davg,
     duck_dsum,
@@ -24,8 +25,6 @@ from innercircle_etl_spark.plans.registry import (
     load,
     register,
 )
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 
 @register(

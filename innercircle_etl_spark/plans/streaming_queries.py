@@ -23,13 +23,16 @@ from innercircle_etl_spark.operators.atomic_swap import (
     write_replace,
 )
 from innercircle_etl_spark.operators.window_dedup import latest_per_key_agg
-from innercircle_etl_spark.plans.registry import dsum, load, register
+from innercircle_etl_spark.plans.registry import (
+    SCRATCH,
+    dsum,
+    load,
+    register,
+)
 from innercircle_etl_spark.streaming import (
     run_available_now,
     stream_ndjson_dir,
 )
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 _EVENT_SCHEMA = T.StructType(
     [
@@ -1149,11 +1152,12 @@ def i13_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle as the batch maintenance form (the i13/u12 pattern applied
 # to the index lifecycle)
 from innercircle_etl_spark.plans.similarity_queries import (  # noqa: E402
+    _HN,
     _INC_UPDATE_ORACLE,
-    _hn_centroids,
-    _hn_frames,
-    _hn_ivf_assign,
+    _codebook,
+    _hn_corpus,
     _index_manifest,
+    _inverted_file,
     _persisted_index,
 )
 
@@ -1199,14 +1203,14 @@ def ann_index_stream_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, ckpt, idx_base = f"{base}/in", f"{base}/ckpt", f"{base}/idx"
     os.makedirs(src, exist_ok=True)
 
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % 10 == 7
     idx = _persisted_index(
         spark,
         idx_base,
         {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built),
+            "assign": _inverted_file(_HN, e.filter(~is_batch), cent_built),
             "centroids": cent_built,
         },
     )
@@ -1216,7 +1220,7 @@ def ann_index_stream_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         recover_table(apath)
         live = batch_df.sparkSession.read.parquet(apath)
-        fresh = _hn_ivf_assign(batch_df, cent).join(
+        fresh = _inverted_file(_HN, batch_df, cent).join(
             live.select("vec_id"), "vec_id", "left_anti"
         )
         write_replace(
@@ -1264,14 +1268,10 @@ def _stream_delete_apply(
         overwrite_partitions_atomic,
         recover_partitions,
     )
-    from innercircle_etl_spark.plans.similarity_queries import (
-        _hn_ivf_assign,
-    )
-
     recover_partitions(apath)
     spark_b = batch_df.sparkSession
     kill = (
-        _hn_ivf_assign(batch_df, cent)
+        _inverted_file(_HN, batch_df, cent)
         .select("vec_id", F.col("cid").cast("long").alias("cid"))
         .localCheckpoint(eager=True)
     )
@@ -1340,13 +1340,13 @@ def ann_index_stream_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, ckpt, idx_base = f"{base}/in", f"{base}/ckpt", f"{base}/idx"
     os.makedirs(src, exist_ok=True)
 
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     idx = _persisted_index(
         spark,
         idx_base,
         {
-            "assign": _hn_ivf_assign(e, cent_built),
+            "assign": _inverted_file(_HN, e, cent_built),
             "centroids": cent_built,
         },
         partition_by={"assign": "cid"},

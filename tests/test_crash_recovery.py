@@ -18,6 +18,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from innercircle_etl_spark.plans.registry import SCRATCH
+
 
 class Crash(RuntimeError):
     pass
@@ -1130,9 +1132,8 @@ def test_versioned_delete_time_travel_and_zero_copy(spark, sf_dir):
     )
 
     QUERIES["ann_index_versioned_delete"](spark, sf_dir).collect()
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
     table = (
-        f"{scratch}/hn_ivf_vdel_"
+        f"{SCRATCH}/hn_ivf_vdel_"
         f"{os.path.basename(sf_dir.rstrip('/'))}/assign"
     )
     assert versions(table) == ["v_day1", "v_day0"]
@@ -1200,9 +1201,8 @@ def test_versioned_compact_keeps_unfragmented_cells_shared(spark, sf_dir):
     from innercircle_etl_spark.plans import QUERIES
 
     QUERIES["ann_index_versioned_compact"](spark, sf_dir).collect()
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
     table = (
-        f"{scratch}/hn_ivf_vcomp_"
+        f"{SCRATCH}/hn_ivf_vcomp_"
         f"{os.path.basename(sf_dir.rstrip('/'))}/assign"
     )
 

@@ -19,6 +19,7 @@ import re
 import pytest
 
 from innercircle_etl_spark.plans import QUERIES
+from innercircle_etl_spark.plans.registry import SCRATCH
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
@@ -239,8 +240,7 @@ def test_partition_pruning_on_date_partitioned_warehouse(spark, sf_dir):
     from innercircle_etl_spark.pipeline import write_daily_partitioned
     from innercircle_etl_spark.plans.registry import load
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    path = f"{scratch}/prune_demo"
+    path = f"{SCRATCH}/prune_demo"
     shutil.rmtree(path, ignore_errors=True)
     ev = load(spark, sf_dir, "events").withColumn("d", F.to_date("ts"))
     write_daily_partitioned(ev, path)
@@ -305,8 +305,7 @@ def test_dynamic_partition_pruning(spark, sf_dir):
     from innercircle_etl_spark.pipeline import write_daily_partitioned
     from innercircle_etl_spark.plans.registry import load
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    path = f"{scratch}/dpp_demo"
+    path = f"{SCRATCH}/dpp_demo"
     shutil.rmtree(path, ignore_errors=True)
     ev = load(spark, sf_dir, "events").withColumn("d", F.to_date("ts"))
     write_daily_partitioned(ev, path)
@@ -342,6 +341,39 @@ def _shuffle_exchanges(df) -> list[str]:
 
     plan = df._jdf.queryExecution().executedPlan().toString()
     return real_shuffle_exchanges(plan)
+
+
+def test_ep5_pins_a_five_column_fact(spark, sf_dir, monkeypatch):
+    """ep5_shadow_trade's one fact scan is repartitioned by coll and
+    pinned; the pin must hold exactly the five columns the cascade
+    reads, with the flag string already folded to a boolean is_sell
+    (round 17's byte cut). The pinned fact is the InMemoryRelation
+    under the two frames ep5 hands to pin_concurrently."""
+    import json
+
+    from innercircle_etl_spark.plans import insight_queries
+
+    real_pin = insight_queries.pin_concurrently
+    pinned = []
+
+    def spy(*dfs):
+        pinned.extend(dfs)
+        return real_pin(*dfs)
+
+    monkeypatch.setattr(insight_queries, "pin_concurrently", spy)
+    QUERIES["ep5_shadow_trade"](spark, sf_dir)
+    assert len(pinned) == 2, pinned
+    for df in pinned:
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        facts = [
+            json.loads(leaves.apply(i).schema().json())["fields"]
+            for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "InMemoryRelation"
+        ]
+        assert len(facts) == 1, facts
+        cols = {f["name"]: f["type"] for f in facts[0]}
+        assert list(cols) == ["wallet", "coll", "ev_date", "price", "is_sell"]
+        assert cols["is_sell"] == "boolean", cols
 
 
 def test_fused_fact_no_exchange_beyond_repartition(spark, sf_dir):
@@ -742,11 +774,11 @@ def test_hard_negatives_shape(spark, sf_dir):
     kept frame (Scan ExistingRDD — the corpus was scored and ranked
     exactly once, in the checkpoint build; the is_neg flag lives in
     the window partition key so one window serves both legs), never
-    a cartesian. Each anchor emits exactly _HN_NEGS triplet rows
-    with ranks 1.._HN_NEGS and margin == pos_cos - neg_cos."""
+    a cartesian. Each anchor emits exactly _HN.negs triplet rows
+    with ranks 1.._HN.negs and margin == pos_cos - neg_cos."""
     from collections import Counter
 
-    from innercircle_etl_spark.plans.similarity_queries import _HN_NEGS
+    from innercircle_etl_spark.plans.similarity_queries import _HN
 
     df = QUERIES["ann_hard_negatives"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -754,9 +786,9 @@ def test_hard_negatives_shape(spark, sf_dir):
     assert "Scan ExistingRDD" in plan, plan
     rows = df.collect()
     per_anchor = Counter(r.anchor_id for r in rows)
-    assert all(n == _HN_NEGS for n in per_anchor.values()), per_anchor
+    assert all(n == _HN.negs for n in per_anchor.values()), per_anchor
     for r in rows:
-        assert 1 <= r.neg_rank <= _HN_NEGS
+        assert 1 <= r.neg_rank <= _HN.negs
         assert r.margin == r.pos_cos - r.neg_cos
         assert r.neg_id != r.pos_id
         assert r.neg_id != r.anchor_id
@@ -768,18 +800,19 @@ def test_hard_negatives_ann_recall(spark, sf_dir):
     IVF-candidate mining against the exact kept set. Invariants:
     no cartesian, both legs present per anchor where truth exists,
     the positive leg's truth is exactly 1, the negative leg's at
-    most _HN_NEGS, 0 <= n_hits <= n_true, recall == n_hits/n_true;
+    most _HN.negs, 0 <= n_hits <= n_true, recall == n_hits/n_true;
     and every ANN-kept candidate actually lives in one of its
     anchor's nprobe nearest IVF cells (the candidate-generation
     contract)."""
     from innercircle_etl_spark.plans.similarity_queries import (
         _FIXED_K,
-        _HN_ANCHORS,
-        _HN_NEGS,
+        _HN,
         _IVF_NPROBE,
-        _hn_frames,
-        _hn_ivf_assign,
-        _hn_kept_ann,
+        _anchor_batch,
+        _hn_corpus,
+        _inverted_file,
+        _keep,
+        _score_ivf,
     )
 
     df = QUERIES["ann_hard_negatives_ann"](spark, sf_dir)
@@ -788,8 +821,8 @@ def test_hard_negatives_ann_recall(spark, sf_dir):
     rows = df.collect()
     assert rows
     for r in rows:
-        assert 0 <= r.anchor_id < _HN_ANCHORS
-        truth_cap = _HN_NEGS if r.is_neg else 1
+        assert 0 <= r.anchor_id < _HN.batch
+        truth_cap = _HN.negs if r.is_neg else 1
         assert 1 <= r.n_true <= truth_cap, r
         assert 0 <= r.n_hits <= r.n_true, r
         assert r.recall == r.n_hits / r.n_true, r
@@ -798,17 +831,17 @@ def test_hard_negatives_ann_recall(spark, sf_dir):
 
     from innercircle_etl_spark.functions import vectors as V
 
-    e, _ = _hn_frames(spark, sf_dir)
+    e = _hn_corpus(spark, sf_dir)
     cent = e.filter(F.col("vec_id") < _FIXED_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
     cell = {
-        a.vec_id: a.cid for a in _hn_ivf_assign(e, cent).collect()
+        a.vec_id: a.cid for a in _inverted_file(_HN, e, cent).collect()
     }
     # recompute each anchor's two nearest cells driver-side
     per_anchor: dict[int, list] = {}
     for a in (
-        e.filter(F.col("vec_id") < _HN_ANCHORS)
+        e.filter(F.col("vec_id") < _HN.batch)
         .crossJoin(F.broadcast(cent))
         .select(
             "vec_id", "cid", V.cosine(F.col("v"), F.col("cv")).alias("c")
@@ -820,13 +853,18 @@ def test_hard_negatives_ann_recall(spark, sf_dir):
         aid: {cid for _, cid in sorted(cands)[:_IVF_NPROBE]}
         for aid, cands in per_anchor.items()
     }
-    inline_kept = _hn_kept_ann(spark, sf_dir).collect()
+    anchors = _anchor_batch(_HN, e, 0)
+    inline_kept = _keep(
+        _HN, _score_ivf(_HN, e, _inverted_file(_HN, e, cent), cent, anchors)
+    ).collect()
     for k in inline_kept:
         assert cell[k.cand_id] in probed[k.anchor_id], k
     # the amortized path (prebuilt inverted file — what production
     # mines against) must produce the IDENTICAL kept set
-    prebuilt = _hn_ivf_assign(e, cent).localCheckpoint(eager=True)
-    amortized = _hn_kept_ann(spark, sf_dir, assign=prebuilt).collect()
+    prebuilt = _inverted_file(_HN, e, cent).localCheckpoint(eager=True)
+    amortized = _keep(
+        _HN, _score_ivf(_HN, e, prebuilt, cent, anchors)
+    ).collect()
     key = lambda r: (r.anchor_id, bool(r.is_neg), r.cand_id)  # noqa: E731
     assert sorted(map(key, amortized)) == sorted(map(key, inline_kept))
 
@@ -837,13 +875,10 @@ def test_amortized_batch0_equals_inline(spark, sf_dir):
     0 is ann_hard_negatives_ann's anchor slice, so its recall rows
     must MATCH the inline-index query exactly (index reuse changes
     cost, never results); batch 1's anchors are the next
-    _HN_ANCHORS vec_ids (disjoint from batch 0). The plan must
+    _HN.batch vec_ids (disjoint from batch 0). The plan must
     consume the pinned index (Scan ExistingRDD) and never go
     cartesian; per-row recall invariants as in the inline test."""
-    from innercircle_etl_spark.plans.similarity_queries import (
-        _HN_ANCHORS,
-        _HN_NEGS,
-    )
+    from innercircle_etl_spark.plans.similarity_queries import _HN
 
     df = QUERIES["ann_hard_negatives_amortized"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -852,9 +887,9 @@ def test_amortized_batch0_equals_inline(spark, sf_dir):
     rows = df.collect()
     assert {r.batch_id for r in rows} == {0, 1}
     for r in rows:
-        lo = r.batch_id * _HN_ANCHORS
-        assert lo <= r.anchor_id < lo + _HN_ANCHORS, r
-        truth_cap = _HN_NEGS if r.is_neg else 1
+        lo = r.batch_id * _HN.batch
+        assert lo <= r.anchor_id < lo + _HN.batch, r
+        truth_cap = _HN.negs if r.is_neg else 1
         assert 1 <= r.n_true <= truth_cap, r
         assert 0 <= r.n_hits <= r.n_true, r
         assert r.recall == r.n_hits / r.n_true, r
@@ -873,14 +908,11 @@ def test_ep13_amortized_batch0_equals_inline(spark, sf_dir):
     frame + one pinned inverted file, a sequence of anchor-doc
     batches. Batch 0 is ep13_contrastive_pairs_ann's anchor slice,
     so its recall rows must MATCH the inline-index query exactly;
-    batch 1's anchors are the next _EP13_ANCHORS docs. The positive
+    batch 1's anchors are the next _EP13.batch docs. The positive
     leg (same-doc equi-join) must be EXACT in every batch — recall
     1.0 wherever truth exists — since it never touches the index;
     plan never cartesian, pinned frames consumed (Scan ExistingRDD)."""
-    from innercircle_etl_spark.plans.similarity_queries import (
-        _EP13_ANCHORS,
-        _EP13_NEGS,
-    )
+    from innercircle_etl_spark.plans.similarity_queries import _EP13
 
     df = QUERIES["ep13_contrastive_pairs_amortized"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -889,9 +921,9 @@ def test_ep13_amortized_batch0_equals_inline(spark, sf_dir):
     rows = df.collect()
     assert {r.batch_id for r in rows} == {0, 1}
     for r in rows:
-        lo = r.batch_id * _EP13_ANCHORS
-        assert lo <= r.anchor_doc < lo + _EP13_ANCHORS, r
-        truth_cap = _EP13_NEGS if r.is_neg else 1
+        lo = r.batch_id * _EP13.batch
+        assert lo <= r.anchor_doc < lo + _EP13.batch, r
+        truth_cap = _EP13.negs if r.is_neg else 1
         assert 1 <= r.n_true <= truth_cap, r
         assert 0 <= r.n_hits <= r.n_true, r
         assert r.recall == r.n_hits / r.n_true, r
@@ -913,17 +945,17 @@ def test_hn_persisted_equals_pinned(spark, sf_dir):
     lives, never the kept sets: the full output must match the
     localCheckpoint form row-for-row, both batches. The final DAG
     can't witness the index read (the mining legs are eagerly pinned
-    by _mine_pos_neg, so the FileScan is consumed at checkpoint time
+    by _keep, so the FileScan is consumed at checkpoint time
     behind the ExistingRDD boundary — the round-8 PLANS.md lesson);
     the witness is the per-batch SCORING leg built from the loaded
     frames, whose plan must read the persisted index path."""
     import os
 
     from innercircle_etl_spark.plans.similarity_queries import (
-        _HN_ANCHORS,
-        _hn_anchor_batch,
-        _hn_frames,
-        _hn_score_ann,
+        _HN,
+        _anchor_batch,
+        _hn_corpus,
+        _score_ivf,
     )
 
     df = QUERIES["ann_hard_negatives_persisted"](spark, sf_dir)
@@ -934,15 +966,14 @@ def test_hn_persisted_equals_pinned(spark, sf_dir):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, pinned))
     # the artifacts exist on disk, and a batch scored from the LOADED
     # frames reads them as FileScans — what a later session does
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    base = f"{scratch}/hn_ivf_index_{os.path.basename(sf_dir.rstrip('/'))}"
+    base = f"{SCRATCH}/hn_ivf_index_{os.path.basename(sf_dir.rstrip('/'))}"
     assert os.path.isdir(f"{base}/assign") and os.path.isdir(
         f"{base}/centroids"
     )
     assign = spark.read.parquet(f"{base}/assign")
     cent = spark.read.parquet(f"{base}/centroids")
-    e, _ = _hn_frames(spark, sf_dir)
-    leg = _hn_score_ann(assign, cent, _hn_anchor_batch(e, 0, _HN_ANCHORS))
+    e = _hn_corpus(spark, sf_dir)
+    leg = _score_ivf(_HN, e, assign, cent, _anchor_batch(_HN, e, 0))
     leg_plan = leg._jdf.queryExecution().executedPlan().toString()
     assert "hn_ivf_index_" in leg_plan, leg_plan
     assert "CartesianProduct" not in leg_plan, leg_plan
@@ -953,14 +984,15 @@ def test_ep13_persisted_equals_pinned(spark, sf_dir):
     and inverted file all round-trip through parquet; output must
     match the localCheckpoint form row-for-row, both batches; and a
     candidate leg built from the loaded artifacts reads them as
-    FileScans (the final DAG hides them behind the _mine_pos_neg
+    FileScans (the final DAG hides them behind the _keep
     checkpoint boundary, as in the hn twin)."""
     import os
 
     from innercircle_etl_spark.plans.similarity_queries import (
-        _EP13_ANCHORS,
-        _ep13_anchor_batch,
-        _ep13_kept_ann,
+        _EP13,
+        _anchor_batch,
+        _keep,
+        _score_ivf,
     )
 
     df = QUERIES["ep13_contrastive_pairs_persisted"](spark, sf_dir)
@@ -971,16 +1003,15 @@ def test_ep13_persisted_equals_pinned(spark, sf_dir):
         spark, sf_dir
     ).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, pinned))
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    base = f"{scratch}/ep13_ivf_index_{os.path.basename(sf_dir.rstrip('/'))}"
+    base = f"{SCRATCH}/ep13_ivf_index_{os.path.basename(sf_dir.rstrip('/'))}"
     for part in ("chunks", "assign", "centroids"):
         assert os.path.isdir(f"{base}/{part}"), part
     chunks = spark.read.parquet(f"{base}/chunks")
     assign = spark.read.parquet(f"{base}/assign")
     cent = spark.read.parquet(f"{base}/centroids")
-    anchors = _ep13_anchor_batch(chunks, 0, _EP13_ANCHORS)
-    kept = _ep13_kept_ann(chunks, assign, cent, anchors)
-    # _ep13_kept_ann pins its result; witness the scan on the
+    anchors = _anchor_batch(_EP13, chunks, 0)
+    kept = _keep(_EP13, _score_ivf(_EP13, chunks, assign, cent, anchors))
+    # _keep pins its result; witness the scan on the
     # pre-checkpoint lineage via the logical plan of the inputs
     leg_plan = (
         assign.join(cent, assign.cid == cent.cid)
@@ -1005,17 +1036,18 @@ def test_incremental_index_update_equals_full_rebuild(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from innercircle_etl_spark.plans.similarity_queries import (
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _codebook,
+        _hn_corpus,
+        _inverted_file,
     )
 
     df = QUERIES["ann_index_incremental_update"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     rows = {r.cid: (r.n_vectors, r.min_vec_id, r.avg_cos) for r in df.collect()}
-    e, _ = _hn_frames(spark, sf_dir)
-    full = _hn_ivf_assign(e, _hn_centroids(e))
+    e = _hn_corpus(spark, sf_dir)
+    full = _inverted_file(_HN, e, _codebook(_HN, e))
     rebuilt = {
         r.cid: (r.n_vectors, r.min_vec_id)
         for r in full.groupBy("cid")
@@ -1040,16 +1072,16 @@ def test_hn_cellpart_prunes_partitions(spark, sf_dir):
     built from the loaded artifacts shows PartitionFilters [cid IN
     (...)] on the FileScan (the cellpart analog of the loaded-index
     FileScan witness in test_hn_persisted_equals_pinned; the final
-    DAG hides the scan behind the _mine_pos_neg checkpoint), and the
+    DAG hides the scan behind the _keep checkpoint), and the
     partition column is dir-encoded, not in ReadSchema."""
     import os
 
     from pyspark.sql import functions as F
 
     from innercircle_etl_spark.plans.similarity_queries import (
-        _HN_ANCHORS,
-        _hn_anchor_batch,
-        _hn_frames,
+        _HN,
+        _anchor_batch,
+        _hn_corpus,
         _ivf_probes,
     )
 
@@ -1060,8 +1092,7 @@ def test_hn_cellpart_prunes_partitions(spark, sf_dir):
     flat = QUERIES["ann_hard_negatives_persisted"](spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, flat))
     # the artifact is hive-partitioned by cell on disk
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    base = f"{scratch}/hn_ivf_cellpart_{os.path.basename(sf_dir.rstrip('/'))}"
+    base = f"{SCRATCH}/hn_ivf_cellpart_{os.path.basename(sf_dir.rstrip('/'))}"
     cells = [
         d for d in os.listdir(f"{base}/assign") if d.startswith("cid=")
     ]
@@ -1069,15 +1100,15 @@ def test_hn_cellpart_prunes_partitions(spark, sf_dir):
     # what a later session does: load, probe, push the cid set
     assign = spark.read.parquet(f"{base}/assign")
     cent = spark.read.parquet(f"{base}/centroids")
-    e, _ = _hn_frames(spark, sf_dir)
+    e = _hn_corpus(spark, sf_dir)
     # a 4-anchor probe batch for the witness: at fixture scale a full
-    # _HN_ANCHORS x nprobe batch can touch every one of the 32 cells
+    # _HN.batch x nprobe batch can touch every one of the 32 cells
     # (pruning fraction is batch*nprobe/k — real k is thousands); the
     # witness only needs a cid set strictly smaller than the cell
     # count so the PartitionFilters assert proves selective pruning
-    assert _HN_ANCHORS >= 4
+    assert _HN.batch >= 4
     probes = _ivf_probes(
-        _hn_anchor_batch(e, 0, 4),
+        _anchor_batch(_HN, e, 0).filter(F.col("anchor_id") < 4),
         cent,
         "anchor_id",
         ("anchor_label", "va"),
@@ -1116,22 +1147,23 @@ def test_cellpart_update_touches_only_batch_cells(spark, sf_dir):
     from innercircle_etl_spark.plans.similarity_queries import (
         _CELLINC_MOD,
         _CELLINC_REM,
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _codebook,
+        _hn_corpus,
         _index_manifest,
+        _inverted_file,
         _persisted_index,
     )
 
     base = "/root/repo/.scratch/test_cellinc_witness"
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built),
+            "assign": _inverted_file(_HN, e.filter(~is_batch), cent_built),
             "centroids": cent_built,
         },
         partition_by={"assign": "cid"},
@@ -1153,7 +1185,7 @@ def test_cellpart_update_touches_only_batch_cells(spark, sf_dir):
     before = {c: snapshot(c) for c in cells}
 
     batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
+        _inverted_file(_HN, e.filter(is_batch), idx["centroids"])
         .select(
             "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
         )
@@ -1194,7 +1226,7 @@ def test_cellpart_update_touches_only_batch_cells(spark, sf_dir):
     full = {
         r.cid: (r.n_vectors, r.min_vec_id)
         for r in _index_manifest(
-            _hn_ivf_assign(e, cent_built), cent_built
+            _inverted_file(_HN, e, cent_built), cent_built
         ).collect()
     }
     assert got == full
@@ -1221,24 +1253,25 @@ def test_cellpart_compact_defragments_only_fragmented_cells(
     from innercircle_etl_spark.plans.similarity_queries import (
         _CELLINC_MOD,
         _CELLINC_REM,
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _codebook,
+        _hn_corpus,
         _index_manifest,
+        _inverted_file,
         _persisted_index,
     )
 
     from innercircle_etl_spark.plans.similarity_queries import _FIXED_K
 
     base = "/root/repo/.scratch/test_cellcomp_witness"
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     is_batch = F.col("vec_id") % _CELLINC_MOD == _CELLINC_REM
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e.filter(~is_batch), cent_built)
+            "assign": _inverted_file(_HN, e.filter(~is_batch), cent_built)
             .repartition(_FIXED_K, "cid"),
             "centroids": cent_built,
         },
@@ -1249,7 +1282,7 @@ def test_cellpart_compact_defragments_only_fragmented_cells(
         "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
     ]
     batch_assign = (
-        _hn_ivf_assign(e.filter(is_batch), idx["centroids"])
+        _inverted_file(_HN, e.filter(is_batch), idx["centroids"])
         .select(*cast_cols)
         .localCheckpoint(eager=True)
     )
@@ -1312,9 +1345,7 @@ def test_ivf_assign_spreads_before_expansion(spark, sf_dir):
 
     from innercircle_etl_spark.functions import vectors as V
     from innercircle_etl_spark.plans.registry import load
-    from innercircle_etl_spark.plans.similarity_queries import (
-        _ivf_assign,
-    )
+    from innercircle_etl_spark.plans.similarity_queries import _ivf_assign
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", V.as_double(F.col("embedding")).alias("v")
@@ -1344,10 +1375,7 @@ def test_ep13_ann_recall(spark, sf_dir):
     exactly 1.0 by construction (the exact positive partition
     contains only same-doc rows, and the same-doc equi-join feeds
     every one of them to the identical ranking)."""
-    from innercircle_etl_spark.plans.similarity_queries import (
-        _EP13_ANCHORS,
-        _EP13_NEGS,
-    )
+    from innercircle_etl_spark.plans.similarity_queries import _EP13
 
     df = QUERIES["ep13_contrastive_pairs_ann"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1355,8 +1383,8 @@ def test_ep13_ann_recall(spark, sf_dir):
     rows = df.collect()
     assert rows
     for r in rows:
-        assert 0 <= r.anchor_doc < _EP13_ANCHORS
-        truth_cap = _EP13_NEGS if r.is_neg else 1
+        assert 0 <= r.anchor_doc < _EP13.batch
+        truth_cap = _EP13.negs if r.is_neg else 1
         assert 1 <= r.n_true <= truth_cap, r
         assert 0 <= r.n_hits <= r.n_true, r
         assert r.recall == r.n_hits / r.n_true, r
@@ -1416,7 +1444,7 @@ def test_contrastive_pairs_shape(spark, sf_dir):
     margins are exact pos-neg differences."""
     from collections import Counter
 
-    from innercircle_etl_spark.plans.similarity_queries import _EP13_NEGS
+    from innercircle_etl_spark.plans.similarity_queries import _EP13
 
     df = QUERIES["ep13_contrastive_pairs"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1425,7 +1453,7 @@ def test_contrastive_pairs_shape(spark, sf_dir):
     rows = df.collect()
     assert rows
     per_anchor = Counter(r.anchor_doc for r in rows)
-    assert all(n <= _EP13_NEGS for n in per_anchor.values()), per_anchor
+    assert all(n <= _EP13.negs for n in per_anchor.values()), per_anchor
     for r in rows:
         assert r.neg_doc != r.anchor_doc, r  # negatives cross-document
         assert r.margin == r.pos_cos - r.neg_cos, r
@@ -1485,13 +1513,13 @@ def test_salted_topk_two_phase(spark, sf_dir):
     from innercircle_etl_spark.functions import vectors as V
     from innercircle_etl_spark.plans.registry import load
     from innercircle_etl_spark.plans.similarity_queries import (
-        _HN_ANCHORS,
+        _HN,
         _salted_topk_rank,
     )
 
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
-    anchors = e.filter(F.col("vec_id") < _HN_ANCHORS).select(
+    anchors = e.filter(F.col("vec_id") < _HN.batch).select(
         F.col("vec_id").alias("anchor_id"), F.col("v").alias("va")
     )
     scored = e.join(
@@ -1660,10 +1688,11 @@ def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
         _DEL_CELL,
         _DEL_MOD,
         _DEL_REM,
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _codebook,
+        _hn_corpus,
         _index_manifest,
+        _inverted_file,
         _persisted_index,
     )
 
@@ -1671,13 +1700,13 @@ def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
     import shutil
 
     shutil.rmtree(base, ignore_errors=True)
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     idx = _persisted_index(
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e, cent_built),
+            "assign": _inverted_file(_HN, e, cent_built),
             "centroids": cent_built,
         },
         partition_by={"assign": "cid"},
@@ -1698,7 +1727,8 @@ def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
     rows_before = spark.read.parquet(apath).count()
 
     kill_assign = (
-        _hn_ivf_assign(
+        _inverted_file(
+            _HN,
             e.filter(F.col("vec_id") % _DEL_MOD == _DEL_REM),
             idx["centroids"],
         )
@@ -1756,7 +1786,7 @@ def test_cellpart_delete_touches_only_kill_cells(spark, sf_dir):
         for r in _index_manifest(final, idx["centroids"]).collect()
     }
     is_kill = (F.col("vec_id") % _DEL_MOD == _DEL_REM)
-    rebuilt = _hn_ivf_assign(e.filter(~is_kill), cent_built).filter(
+    rebuilt = _inverted_file(_HN, e.filter(~is_kill), cent_built).filter(
         F.col("cid") != _DEL_CELL
     )
     full = {
@@ -1792,17 +1822,18 @@ def test_cellpart_delete_composes_with_compaction(spark, sf_dir):
         _DEL_MOD,
         _DEL_REM,
         _FIXED_K,
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _codebook,
+        _hn_corpus,
         _index_manifest,
+        _inverted_file,
         _persisted_index,
     )
 
     base = "/root/repo/.scratch/test_celldel_compact"
     shutil.rmtree(base, ignore_errors=True)
-    e, _ = _hn_frames(spark, sf_dir)
-    cent_built = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent_built = _codebook(_HN, e)
     cast_cols = [
         "vec_id", "label", "v", F.col("cid").cast("long").alias("cid")
     ]
@@ -1811,7 +1842,7 @@ def test_cellpart_delete_composes_with_compaction(spark, sf_dir):
         spark,
         base,
         {
-            "assign": _hn_ivf_assign(e, cent_built).repartition(
+            "assign": _inverted_file(_HN, e, cent_built).repartition(
                 _FIXED_K, "cid"
             ),
             "centroids": cent_built,
@@ -1822,7 +1853,8 @@ def test_cellpart_delete_composes_with_compaction(spark, sf_dir):
 
     # the delete (the registered query's exact flow)
     kill_assign = (
-        _hn_ivf_assign(
+        _inverted_file(
+            _HN,
             e.filter(F.col("vec_id") % _DEL_MOD == _DEL_REM),
             idx["centroids"],
         )
@@ -1926,18 +1958,18 @@ def test_versioned_cellpart_serving_prunes_at_the_scan(spark, sf_dir):
         read_version,
     )
     from innercircle_etl_spark.plans.similarity_queries import (
-        _hn_centroids,
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _codebook,
+        _hn_corpus,
+        _inverted_file,
     )
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-    table = f"{scratch}/test_versioned_cellpart"
+    table = f"{SCRATCH}/test_versioned_cellpart"
     shutil.rmtree(table, ignore_errors=True)
-    e, _ = _hn_frames(spark, sf_dir)
-    cent = _hn_centroids(e)
+    e = _hn_corpus(spark, sf_dir)
+    cent = _codebook(_HN, e)
     publish_version(
-        _hn_ivf_assign(e, cent), table, "day0", partition_by="cid"
+        _inverted_file(_HN, e, cent), table, "day0", partition_by="cid"
     )
     # the version dir is hive-partitioned on cid
     vdir = current_path(table)
@@ -1957,7 +1989,7 @@ def test_versioned_cellpart_serving_prunes_at_the_scan(spark, sf_dir):
         F.col("cid").isin([1, 5])
     )
     publish_version(
-        _hn_ivf_assign(e, cent), table, "day1", partition_by="cid"
+        _inverted_file(_HN, e, cent), table, "day1", partition_by="cid"
     )
     assert in_flight.count() == n_before  # retained dir, intact
     assert read_current(spark, table).filter(

@@ -109,6 +109,29 @@ def test_agg_form_handles_dotted_column_names(spark):
     assert _rows(agg, "k") == _rows(win, "k")
 
 
+def test_window_forms_handle_dotted_key_order_and_tiebreaker_names(spark):
+    # Advice item 3, window half: keys, order column and tiebreakers
+    # are all quoted, so dotted names are taken verbatim (an unquoted
+    # name would parse as a struct path and fail to resolve). Each
+    # window form must keep the same rows as its aggregate twin.
+    df = spark.range(60).select(
+        (F.col("id") % 6).alias("k.ey"),
+        (F.col("id") % 4).alias("t.s"),  # ties within key groups
+        F.col("id").alias("s.eq"),  # unique -> total order
+        (F.col("id") * 7 % 11).alias("pay.load"),
+    )
+    for w_form, a_form in (
+        (latest_per_key, latest_per_key_agg),
+        (first_per_key, first_per_key_agg),
+    ):
+        win = w_form(df, ["k.ey"], "t.s", tiebreakers=["s.eq"])
+        agg = a_form(df, ["k.ey"], "t.s", tiebreakers=["s.eq"])
+        assert win.columns == df.columns
+        got = sorted(tuple(r) for r in win.collect())
+        assert len(got) == 6
+        assert got == sorted(tuple(r) for r in agg.collect())
+
+
 def test_agg_form_input_named_row_does_not_collide(spark):
     # collision-checked temp name: a column literally named __row
     df = spark.range(10).select(

@@ -11,9 +11,7 @@ import glob
 import os
 
 from innercircle_etl_spark.plans.graph_queries import _SCALE
-from innercircle_etl_spark.plans.registry import QUERIES
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+from innercircle_etl_spark.plans.registry import QUERIES, SCRATCH
 
 
 def test_u11_rewrites_only_touched_partition(spark, sf_dir):

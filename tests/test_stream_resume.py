@@ -10,12 +10,11 @@ import shutil
 
 from pyspark.sql import types as T
 
+from innercircle_etl_spark.plans.registry import SCRATCH
 from innercircle_etl_spark.streaming import (
     run_available_now,
     stream_ndjson_dir,
 )
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
 
 _SCHEMA = T.StructType(
     [
@@ -74,11 +73,11 @@ def test_ann_index_stream_update_replay_is_noop(spark, sf_dir):
     from innercircle_etl_spark.operators.atomic_swap import write_replace
     from innercircle_etl_spark.plans import QUERIES
     from innercircle_etl_spark.plans.similarity_queries import (
-        _hn_frames,
-        _hn_ivf_assign,
+        _HN,
+        _hn_corpus,
         _index_manifest,
+        _inverted_file,
     )
-    from innercircle_etl_spark.plans.streaming_queries import SCRATCH
 
     manifest = {
         r.cid: (r.n_vectors, r.min_vec_id, r.avg_cos)
@@ -91,10 +90,10 @@ def test_ann_index_stream_update_replay_is_noop(spark, sf_dir):
 
     # replay: re-merge wave 0 (already applied) with the query's own
     # insert-if-absent discipline -> row count unchanged
-    e, _ = _hn_frames(spark, sf_dir)
+    e = _hn_corpus(spark, sf_dir)
     wave0 = e.filter(F.col("vec_id") % 20 == 7)
     live = spark.read.parquet(apath)
-    fresh = _hn_ivf_assign(wave0, cent).join(
+    fresh = _inverted_file(_HN, wave0, cent).join(
         live.select("vec_id"), "vec_id", "left_anti"
     )
     write_replace(
@@ -124,11 +123,10 @@ def test_ann_index_stream_delete_replay_is_noop(spark, sf_dir):
     from innercircle_etl_spark.plans.similarity_queries import (
         _DEL_MOD,
         _DEL_REM,
-        _hn_frames,
+        _hn_corpus,
         _index_manifest,
     )
     from innercircle_etl_spark.plans.streaming_queries import (
-        SCRATCH,
         _stream_delete_apply,
     )
 
@@ -153,7 +151,7 @@ def test_ann_index_stream_delete_replay_is_noop(spark, sf_dir):
 
     before = snapshot()
     # replay wave A (already applied) through the REAL apply path
-    e, _ = _hn_frames(spark, sf_dir)
+    e = _hn_corpus(spark, sf_dir)
     wave_a = e.filter(F.col("vec_id") % (2 * _DEL_MOD) == _DEL_REM)
     assert wave_a.count() > 0
     _stream_delete_apply(apath, cent, wave_a, "replay")
