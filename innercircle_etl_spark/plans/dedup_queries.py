@@ -40,9 +40,8 @@ from innercircle_etl_spark.plans.planting import (
 from innercircle_etl_spark.plans.registry import (
     load,
     pin_concurrently,
-    pinned_rdd_ids,
     register,
-    release_pins,
+    release,
 )
 
 # ---------------------------------------------------------------- exact
@@ -1289,15 +1288,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     single changed-row COUNT — the standard Spark connected-
     components loop at edge-list scale). Oracle = a recursive-CTE
     transitive closure over the same pairs."""
-    def _pinned_ids() -> dict:
-        # shared helper (registry.pinned_rdd_ids) bound to this session
-        return pinned_rdd_ids(spark)
-
-    # blocks pinned BEFORE this query ran (e.g. a session-lifetime
-    # Lloyd codebook pin) are not ours to release: unpersisting a
-    # localCheckpoint LOSES the frame (lineage is truncated), so the
-    # intra-query cleanup below must touch only blocks this query made
-    preexisting = set(_pinned_ids())
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.unionByName(
         pairs.select(
@@ -1309,16 +1299,14 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputes silently, and the un-truncated lineage re-enters
     # every iteration's plan below (the round-8 sf10 failure mode)
     ).localCheckpoint(eager=True)
+    # edges hold the pairs now: free the minhash candidate pins
+    release(pairs)
     labels = (
         edges.select(F.col("doc_a").alias("n"))
         .distinct()
         .withColumn("label", F.col("n"))
     )
-
-    # this query's own pins so far: the minhash candidate subtree +
-    # edges' checkpoint — released together after the loop
-    edge_ids = set(_pinned_ids()) - preexisting
-    prior_sweep = {}  # id -> jrdd of the PREVIOUS sweep's checkpoint
+    prev = None  # the previous sweep's pinned frame
     for _ in range(20):  # >= max component diameter; fixture: 1
         neighbor_min = (
             edges.join(
@@ -1357,13 +1345,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         # without this, up to 20 sweeps of checkpoints accumulate for
         # the query's whole lifetime and shrink the execution-memory
         # pool at sf10 (round-8 advice: the intra-query twin of the
-        # drop_query_caches leak class). Blocking removal on purpose.
-        release_pins(prior_sweep.values())
-        prior_sweep = {
-            i: j
-            for i, j in _pinned_ids().items()
-            if i not in edge_ids and i not in preexisting
-        }
+        # drop_query_caches leak class)
+        if prev is not None:
+            release(prev)
+        prev = updated
         changed = updated.filter(
             F.col("new_label") != F.col("label")
         ).count()  # scalar convergence probe, not data movement
@@ -1373,9 +1358,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result depends only on the LAST sweep's checkpoint — the
     # edge list (which embeds the whole minhash pipeline) can be
     # released before the caller materializes the result
-    release_pins(
-        j for i, j in _pinned_ids().items() if i in edge_ids
-    )
+    release(edges)
     return labels.select(
         F.col("n").alias("doc_id"), F.col("label").alias("canonical_id")
     )

@@ -26,6 +26,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from innercircle_etl_spark.session import graft_cpus
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -92,15 +94,9 @@ def _size_shuffle_once(spark: SparkSession) -> None:
     this knob is sized ~2-3x total cores by the session factory."""
     if spark.conf.get(_SHUFFLE_SIZED_MARK, None) == "1":
         return
+    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
+        spark.conf.set("spark.sql.shuffle.partitions", str(graft_cpus()))
     spark.conf.set(_SHUFFLE_SIZED_MARK, "1")
-    if spark.conf.get("spark.sql.shuffle.partitions", "200") != "200":
-        return
-    try:
-        n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:  # malformed env var → keep a sane local default
-        n = 32
-    if n > 0:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -195,61 +191,62 @@ def pin_concurrently(*dfs: DataFrame) -> list[DataFrame]:
     other (a dependent frame would still compute correctly — Spark
     jobs are self-contained — but would re-run the dependency's
     lineage instead of reading its pin, the exact waste pinning
-    exists to avoid)."""
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=True)]
-    from concurrent.futures import ThreadPoolExecutor
+    exists to avoid).
 
-    spark = dfs[0].sparkSession
-    # Snapshot the persisted-RDD ids so a failed group can release
-    # exactly the pins IT created (a sibling pin that already
-    # materialized would otherwise leak its blocks past the repo's
-    # release_pins discipline — the caller never sees the handles).
-    # Queries run one-at-a-time per session here, so ids appearing
-    # during this call belong to this group.
-    before = set(pinned_rdd_ids(spark))
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        futs = [
-            pool.submit(lambda d=d: d.localCheckpoint(eager=True))
-            for d in dfs
-        ]
-        out, first_err = [], None
-        for f in futs:
-            try:
-                out.append(f.result())
-            except Exception as e:  # noqa: BLE001 — re-raised below
-                if first_err is None:
-                    first_err = e
-        if first_err is not None:
-            release_pins(
-                j
-                for rid, j in pinned_rdd_ids(spark).items()
-                if rid not in before
-            )
-            raise first_err
-        return out
+    Each pin is marked lazily and its frame kept BEFORE the job that
+    fills it, so if any pin fails the whole group — the failed pin's
+    partial blocks included — is released by ``release``, and no
+    other caller's pins are touched."""
+    pins: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        p = df.localCheckpoint(eager=False)
+        pins.append(p)
+        p._jdf.queryExecution().analyzed().rdd().count()
+        return p
+
+    try:
+        if len(dfs) == 1:
+            return [pin(dfs[0])]
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
+            return list(pool.map(pin, dfs))
+    except Exception:
+        # the pool has joined every worker, so ``pins`` is complete
+        release(*pins)
+        raise
+
+
+def release(*frames: DataFrame) -> None:
+    """Blocking-unpersist exactly the pinned RDDs each frame reads:
+    the ``LogicalRDD`` leaves of its analyzed plan, which in this
+    package are eager ``localCheckpoint`` pins. A pin's own frame
+    frees that pin; a frame derived from pins frees its inputs and
+    not any pin made from it. Call it once the frame is dead — a
+    localCheckpoint has no lineage to recompute from. Never raises:
+    a pin left behind only costs memory, never correctness."""
+    for df in frames:
+        try:
+            leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+            it = leaves.iterator()
+            while it.hasNext():
+                leaf = it.next()
+                if leaf.getClass().getSimpleName() == "LogicalRDD":
+                    leaf.rdd().unpersist(True)
+        except Exception:  # py4j surface moved — blocks only cost memory
+            pass
 
 
 def pinned_rdd_ids(spark: SparkSession) -> dict:
-    """id -> java RDD handle for every persisted RDD — the only
-    handle PySpark exposes to a localCheckpoint's blocks. Used by
-    iterative loops to release a finished sweep's pinned blocks
-    (the round-8 advice lesson: intra-query pins accumulate for the
-    query's whole lifetime otherwise); the py4j drift guard makes a
-    moved JVM surface cost only memory, never correctness."""
+    """id -> java RDD handle for every persisted RDD in the session —
+    a runner-level view of what a query left pinned (perfbench counts
+    and sizes these after each op). Query code releases its own pins
+    with ``release`` instead: this map is global, and diffing it would
+    also catch a concurrent caller's pins. The py4j drift guard makes
+    a moved JVM surface read as no pins, never as an error."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(j.id()): j for j in jmap.values()}
     except Exception:  # py4j surface moved — blocks only cost memory
         return {}
-
-
-def release_pins(handles) -> None:
-    """Blocking-unpersist a set of java RDD handles (values from
-    ``pinned_rdd_ids``). Never raises: a lost handle only costs
-    memory, never correctness."""
-    for jrdd in handles:
-        try:
-            jrdd.unpersist(True)
-        except Exception:
-            pass

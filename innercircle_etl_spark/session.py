@@ -15,6 +15,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int:
+    """Local parallelism from ``SPARK_GRAFT_CPUS`` (default 32) — the
+    one parser for the variable, shared by ``get_spark`` and the
+    loaders' shuffle sizing. A malformed or non-positive value raises
+    a ``ValueError`` that names the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return n
+
+
 def get_spark(
     app_name: str = "innercircle_etl_spark",
     master: str | None = None,
@@ -28,7 +45,7 @@ def get_spark(
     in the environment and size ``shuffle_partitions`` ~2-3x total
     cores (or leave AQE to coalesce).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = graft_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -62,25 +79,26 @@ def get_spark(
 
 
 def drop_query_caches(spark) -> None:
-    """Between-query storage hygiene for long-lived sessions.
+    """Between-query storage hygiene for long-lived sessions: clear
+    the table cache and blocking-unpersist EVERY persisted RDD in the
+    session.
 
-    Several operators deliberately pin shared subtrees with eager
-    ``localCheckpoint`` (the MinHash shingle table, ep3/ep5's floor
-    and leg frames) — the right call WITHIN a query, where two or
-    three consumers would otherwise recompute the subtree. But a
-    pinned block outlives its query: ``spark.catalog.clearCache()``
-    frees table caches only, so a session that runs many queries
-    (a verification sweep, a bench, a long-lived cluster job)
-    accumulates dead pinned blocks and its later queries run against
-    a shrinking execution-memory pool (measured: a 155-query sweep
-    and the bench both inflated 25%+ before this existed).
+    Query code pins shared subtrees with eager ``localCheckpoint``
+    and frees the pins it no longer needs with
+    ``registry.release``; the pins behind its result outlive the
+    query, because ``spark.catalog.clearCache()`` frees table caches
+    only. A session that runs many queries (a verification sweep, a
+    bench, a long-lived cluster job) would otherwise accumulate dead
+    pinned blocks and run its later queries against a shrinking
+    execution-memory pool (measured: a 155-query sweep and the bench
+    both inflated 25%+ before this existed).
 
-    Call this between queries, after the previous query's result has
-    been fully materialized — a localCheckpoint's blocks ARE its
-    data, so dropping them mid-consumption would lose the frame
-    (lineage is truncated). Blocking removal on purpose: async
-    removal competes with the next query's tasks for the block
-    manager.
+    A runner-level tool only: call it between queries, after the
+    previous result has been fully materialized and while no other
+    thread is using the session — a localCheckpoint's blocks ARE its
+    data (lineage is truncated), so this would lose any live pin.
+    Blocking removal on purpose: async removal competes with the next
+    query's tasks for the block manager.
     """
     spark.catalog.clearCache()
     try:

@@ -128,8 +128,9 @@ def test_edit_distance_suffix_key_short_text_parity(spark):
 
 def test_shuffle_sizing_is_once_per_session_and_validated(spark, monkeypatch):
     """registry._size_shuffle_once must (a) run once per session,
-    (b) respect the marker conf, (c) survive a malformed
-    SPARK_GRAFT_CPUS without blowing up (round-4 ADVICE)."""
+    (b) respect the marker conf, (c) reject a malformed
+    SPARK_GRAFT_CPUS with an error that names it, and stay unmarked
+    so the next load() reports it again."""
     from innercircle_etl_spark.plans import registry as R
 
     prev_mark = spark.conf.get(R._SHUFFLE_SIZED_MARK, None)
@@ -141,9 +142,17 @@ def test_shuffle_sizing_is_once_per_session_and_validated(spark, monkeypatch):
         R._size_shuffle_once(spark)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
 
-        # fresh session state + malformed env var -> sane default, no crash
+        # fresh session state + malformed env var -> named error,
+        # conf and marker untouched
         spark.conf.unset(R._SHUFFLE_SIZED_MARK)
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "not-a-number")
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            R._size_shuffle_once(spark)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert spark.conf.get(R._SHUFFLE_SIZED_MARK, None) is None
+
+        # a valid value sizes the stock default
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
         R._size_shuffle_once(spark)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
 
@@ -216,6 +225,35 @@ def test_cdc_recover_sweeps_stale_tmp(tmp_path):
     recover_snapshot(snap)
     assert not os.path.exists(f"{snap}_tmp_42")
     assert os.path.exists(snap)
+
+
+@pytest.mark.parametrize("raw", ["not-a-number", "", "0", "-4"])
+def test_spark_graft_cpus_is_validated_by_both_entry_points(
+    spark, monkeypatch, raw
+):
+    """get_spark and the loaders' shuffle sizing parse SPARK_GRAFT_CPUS
+    with one helper: a malformed or non-positive value raises a
+    ValueError naming the variable at both."""
+    from innercircle_etl_spark.plans import registry as R
+    from innercircle_etl_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark("tests")
+
+    prev_mark = spark.conf.get(R._SHUFFLE_SIZED_MARK, None)
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.unset(R._SHUFFLE_SIZED_MARK)
+        spark.conf.set("spark.sql.shuffle.partitions", "200")
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            R._size_shuffle_once(spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        if prev_mark is None:
+            spark.conf.unset(R._SHUFFLE_SIZED_MARK)
+        else:
+            spark.conf.set(R._SHUFFLE_SIZED_MARK, prev_mark)
 
 
 def test_cluster_canonical_releases_intra_query_pins(spark, sf_dir):

@@ -206,3 +206,110 @@ def test_pin_concurrently_single_frame_fast_path(spark):
     a = spark.range(7).select((F.col("id") + 1).alias("n"))
     (pa,) = pin_concurrently(a)
     assert _rows(pa, "n") == _rows(a, "n")
+
+
+def _pin_id(pinned):
+    """RDD id of the pin a localCheckpoint frame reads."""
+    return int(pinned._jdf.queryExecution().analyzed().rdd().id())
+
+
+def test_pin_concurrently_failure_spares_a_concurrent_callers_pin(
+    spark, tmp_path
+):
+    # A group whose member fails LATE, while another thread eagerly
+    # pins an unrelated frame: the failure path must release exactly
+    # the group's own pins. The member's UDF and the other thread
+    # hand off through files, so the unrelated pin always lands
+    # while the group is running.
+    import os
+    import threading
+    import time
+
+    import pytest
+    from pyspark.sql.types import LongType
+
+    from innercircle_etl_spark.plans.registry import pinned_rdd_ids
+
+    started, pinned = str(tmp_path / "started"), str(tmp_path / "pinned")
+
+    def wait_for(path):
+        deadline = time.time() + 60
+        while not os.path.exists(path) and time.time() < deadline:
+            time.sleep(0.05)
+
+    def late_boom(x):
+        open(started, "w").close()
+        wait_for(pinned)
+        raise RuntimeError("late pin boom")
+
+    good = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("x"))
+    bad = spark.range(1).select(F.udf(late_boom, LongType())("id").alias("e"))
+    other = {}
+
+    def pin_other():
+        wait_for(started)
+        other["df"] = spark.range(10).toDF("y").localCheckpoint(eager=True)
+        open(pinned, "w").close()
+
+    before = set(pinned_rdd_ids(spark))
+    t = threading.Thread(target=pin_other)
+    t.start()
+    try:
+        with pytest.raises(Exception, match="late pin boom"):
+            pin_concurrently(good, bad)
+    finally:
+        t.join()
+    other_id = _pin_id(other["df"])
+    after = set(pinned_rdd_ids(spark))
+    assert other_id in after
+    assert other["df"].count() == 10
+    assert after - before == {other_id}, f"group leaked: {after - before}"
+
+
+def test_pin_concurrently_failed_single_pin_leaves_nothing(spark):
+    import pytest
+
+    from innercircle_etl_spark.plans.registry import pinned_rdd_ids
+
+    bad = spark.range(3).select(F.expr("raise_error('solo boom')").alias("e"))
+    before = set(pinned_rdd_ids(spark))
+    with pytest.raises(Exception, match="solo boom"):
+        pin_concurrently(bad)
+    assert not set(pinned_rdd_ids(spark)) - before
+
+
+def test_release_frees_exactly_the_pins_a_frame_reads(spark):
+    from innercircle_etl_spark.plans.registry import pinned_rdd_ids, release
+
+    a = spark.range(10).localCheckpoint(eager=True)
+    b = spark.range(5).toDF("j").localCheckpoint(eager=True)
+    unrelated = spark.range(3).toDF("u").localCheckpoint(eager=True)
+    derived = a.crossJoin(b)
+    made = derived.localCheckpoint(eager=True)
+    release(derived)
+    live = set(pinned_rdd_ids(spark))
+    assert _pin_id(a) not in live and _pin_id(b) not in live
+    assert {_pin_id(made), _pin_id(unrelated)} <= live
+    assert made.count() == 50
+    assert unrelated.count() == 3
+
+
+def test_only_the_registry_reads_the_global_pin_map():
+    # Query code releases its pins by frame (registry.release); the
+    # session-wide persistent-RDD map is for runners only.
+    import pathlib
+
+    import innercircle_etl_spark
+
+    pkg = pathlib.Path(innercircle_etl_spark.__file__).parent
+    repo = pkg.parent
+    for path in sorted((pkg / "plans").glob("*.py")):
+        if path.name == "registry.py":
+            continue
+        src = path.read_text()
+        for name in ("getPersistentRDDs", "pinned_rdd_ids"):
+            assert name not in src, f"{path.name} references {name}"
+    program = [*pkg.rglob("*.py"), *(repo / "tools").glob("*.py")]
+    program += [repo / "bench.py", repo / "__spark_entry__.py"]
+    for path in program:
+        assert "release_pins" not in path.read_text(), path
